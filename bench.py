@@ -382,11 +382,11 @@ def _run_staged(spark, transcripts, redirects):
     t_all = time.time()
     # same plan as run_pipeline: mentions persisted (cache fills during the
     # extract_surfaces stage; assign reads it back instead of re-extracting)
-    from spel_spark.pipeline import mentions_storage_level
+    from spel_spark.pipeline import MENTIONS_STORAGE
 
     mentions = with_mention_id(
         with_norm_surface(extract_mentions(transcripts), redirects)
-    ).persist(mentions_storage_level())
+    ).persist(MENTIONS_STORAGE)
     surfaces = timed(
         "extract_surfaces",
         lambda: _counted(surface_nodes(mentions).persist()),
@@ -463,9 +463,6 @@ def run_scaling() -> None:
         "speedup": round(speedup, 3),
         "run_walls": run_walls,
         "dispersion": dispersion,
-        "mentions_storage": os.environ.get(
-            "SPEL_MENTIONS_STORAGE", "MEMORY_AND_DISK"
-        ),
     }
     if staged[lo_threads] and staged[hi_threads]:
         slo = min(staged[lo_threads], key=lambda r: r["wall_sec"])
@@ -601,19 +598,16 @@ def _noise_md(r: dict) -> str:
     hardcoded host history (a report must describe its own provenance)."""
     rw = r.get("run_walls")
     if not rw or len(rw.get("low", [])) < 2:
-        cfg = f"Mentions persist level: {r.get('mentions_storage', 'MEMORY_AND_DISK')}."
         note = r.get("note")
-        return cfg + (f"  Note: {note}.\n\n" if note else "\n\n")
+        return f"Note: {note}.\n\n" if note else ""
     lo_spread = (rw["low"][-1] - rw["low"][0]) / rw["low"][0] * 100
     hi_spread = (rw["high"][-1] - rw["high"][0]) / rw["high"][0] * 100
-    storage = r.get("mentions_storage", "MEMORY_AND_DISK")
     out = (
         f"Measurement noise (this run, {len(rw['low'])} reps per level): "
         f"N-level walls {rw['low']} s (spread {lo_spread:.0f}%), 4N-level "
         f"walls {rw['high']} s (spread {hi_spread:.0f}%); the HEADLINE "
         f"efficiency is the median of the interleaved reps (dispersion "
-        f"table below) — per-level minima ride along for context only.  "
-        f"Mentions persist level: {storage}.\n\n"
+        f"table below) — per-level minima ride along for context only.\n\n"
     )
     d = r.get("dispersion")
     if d:

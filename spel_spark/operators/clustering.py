@@ -11,16 +11,15 @@ two equi-joins + one min-aggregation; no collect_list, so Zipf-hot nodes
 stay inside map-side-combinable aggregations.
 
 Catalyst cannot express recursion, so the loop is driver-side with a
-checkpoint per iteration to truncate lineage (the reference's analogue:
-its pickle cache, src/spel/utils.py:116-137) and a lineage row per stage.
+``localCheckpoint`` per iteration to truncate lineage (executor-local, not
+durable; the reference's analogue: its pickle cache,
+src/spel/utils.py:116-137).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from spel_spark.io import CheckpointStore
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -58,7 +57,6 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    store: CheckpointStore | None = None,
     max_iter: int = 25,
     backend: str = "auto",
     driver_limit: int = 5_000_000,
@@ -96,13 +94,8 @@ def connected_components(
     prev_sig = None
     for it in range(max_iter):
         nbr = _small_star(_large_star(nbr))
-        # checkpoint: truncate the iterative lineage (driver loop, SURVEY §4 #2)
-        if store is not None:
-            store.write(nbr, f"_cc_iter_{it % 2}")
-            nbr = store.read(f"_cc_iter_{it % 2}")
-            store.append_lineage(f"cc_iter_{it}", nbr)
-        else:
-            nbr = nbr.localCheckpoint(eager=True)
+        # truncate the iterative lineage (driver loop, SURVEY §4 #2)
+        nbr = nbr.localCheckpoint(eager=True)
         sig_row = nbr.agg(
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("u", "v")).alias("h"),  # overflow-free set checksum

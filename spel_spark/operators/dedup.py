@@ -262,15 +262,6 @@ def _first_shared_slot(n_bands: int):
     return expr
 
 
-def _word_minhash_bands(
-    docs: DataFrame, id_col: str, text_col: str, n_hashes: int = 16, bands: int = 8
-) -> DataFrame:
-    """MinHash over word token sets, banded (engine-internal xxhash64)."""
-    return _sig_bands(
-        _word_minhash_sig(docs, id_col, text_col, n_hashes), id_col, n_hashes, bands
-    )
-
-
 def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -22,16 +22,19 @@ def resolve_labeled_pairs(labeled: DataFrame, clusters: DataFrame) -> DataFrame:
     clusters: mention rows with (conv_id, turn_idx, begin_char, cluster_id).
     Adds pred_same.  Pairs whose mentions were not extracted resolve to
     pred_same = false (a recall miss, exactly like a blocking miss).
+
+    Cache contract: each call persists a derived projection of
+    ``clusters`` (never the caller's DataFrame) and does not unpersist it.
+    Callers running this repeatedly in one session should call
+    ``spark.catalog.clearCache()`` between runs, as bench.py does.
     """
     # consumed twice (a-side AND b-side join): persist the narrow derived
     # projection so the cluster-assignment DAG behind ``clusters`` — which
     # projects the full mention instance table — expands once, not twice
     # (guide §2.4/§5; r6 in-process A/B on the 2000-turn ER gate: median
     # 7.51 s -> 6.77 s, and at 10^9-mention scale the second expansion is
-    # a second full instance-table pass).  A derived projection is
-    # persisted, never the caller's DataFrame — same lifecycle contract as
-    # anchor_pairs/minhash_near_dup_pairs (callers running repeatedly
-    # should clearCache between runs; bench.py does).
+    # a second full instance-table pass).  Same lifecycle contract as
+    # anchor_pairs/minhash_near_dup_pairs.
     c = clusters.select(
         "conv_id", "turn_idx", "begin_char", "cluster_id"
     ).persist()

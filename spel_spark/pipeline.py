@@ -10,7 +10,7 @@ resumable from the last committed stage — north rule):
     -> pairs        (salted self-join over distinct surfaces)
     -> scores       (blended similarity)
     -> edges        (threshold)
-    -> components   (large-star/small-star CC, per-iteration checkpoint)
+    -> components   (large-star/small-star CC, per-iteration localCheckpoint)
     -> clusters     (mention -> canonical min-mention-id cluster)
 
 The reference's equivalent lifecycle is EP1 (SURVEY §3): per-document
@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +35,6 @@ from spel_spark.operators.blocking import (
 from spel_spark.operators.clustering import assign_clusters, connected_components
 from spel_spark.operators.mentions import (
     extract_mentions,
-    extract_mentions_arrow,
     with_mention_id,
     with_norm_surface,
 )
@@ -43,41 +43,20 @@ from spel_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs, thresho
 STAGES = ["mentions", "surfaces", "blocks", "pairs", "scores", "edges", "clusters"]
 
 
-def mentions_storage_level():
-    """Storage level for the (wide) mentions persist, shared by the fused
-    pipeline and bench.py so the bench always measures the shipped plan.
-    MEMORY_AND_DISK default (pinned A/B at 8M turns with the 32g heap:
-    62.2 s vs 63.7 s DISK_ONLY at 8 threads); override with
-    SPEL_MENTIONS_STORAGE for small-heap deployments."""
-    import os
-
-    from pyspark import StorageLevel
-
-    name = os.environ.get("SPEL_MENTIONS_STORAGE", "MEMORY_AND_DISK")
-    lvl = getattr(StorageLevel, name, None)
-    if not isinstance(lvl, StorageLevel):
-        valid = [n for n in dir(StorageLevel) if n[0].isupper()]
-        raise ValueError(
-            f"SPEL_MENTIONS_STORAGE={name!r} is not a pyspark StorageLevel; "
-            f"valid: {', '.join(valid)}"
-        )
-    return lvl
+# Storage level for the (wide) mentions persist, shared by the fused
+# pipeline and bench.py so the bench always measures the shipped plan
+# (pinned A/B at 8M turns with the 32g heap: 62.2 s vs 63.7 s DISK_ONLY at
+# 8 threads, scaling eff 0.866 vs 0.824).
+MENTIONS_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
 @dataclass
 class PipelineConfig:
     threshold: float = DEFAULT_THRESHOLD
-    max_cell: int = 1024
-    max_salts: int = 64
-    use_arrow_extractor: bool = False
     use_cosine: bool = False
-    # persist the (wide) mentions table in ephemeral mode: trades one full
-    # re-extract pass in assign_clusters for a columnar cache fill
-    persist_mentions: bool = True
     # anchor-sparsified pair generation (O(n·k) per block) vs exact
     # all-pairs (O(n²), salted).  Anchors are the scale default.
     exact_pairs: bool = False
-    n_anchors: int = 2
 
 
 def run_pipeline(
@@ -102,28 +81,21 @@ def run_pipeline(
     # edges, blocks feeds only pairs, pairs feeds only scores — persisting
     # them pays a cache fill nothing reads twice (r5: dropping the blocks/
     # pairs persists removed two serial materialization barriers from the
-    # fused DAG).  mentions defaults to persisted (columnar cache): the
-    # 8M-turn scaling runs showed the re-extract pass in assign_clusters
-    # costs more than the cache fill; surfaces (tiny) is read by blocks
-    # AND assign; edges by CC's backend-selection count AND the collect.
-    _EPHEMERAL_NO_PERSIST = {"scores", "clusters", "blocks", "pairs"} | (
-        set() if cfg.persist_mentions else {"mentions"}
-    )
+    # fused DAG).  mentions is persisted (columnar cache): the 8M-turn
+    # scaling runs showed the re-extract pass in assign_clusters costs
+    # more than the cache fill; surfaces (tiny) is read by blocks AND
+    # assign; edges by CC's backend-selection count AND the collect.
+    _EPHEMERAL_NO_PERSIST = {"scores", "clusters", "blocks", "pairs"}
 
     def stage(name: str, build) -> DataFrame:
         if store is None:
             df = build()
-            # fuse into one DAG; persist only small reused outputs.
-            # mentions (wide, 10^7+ rows): MEMORY_AND_DISK with the 32g
-            # local-mode heap (pinned A/B at 8M turns: 62.2 s vs 63.7 s
-            # DISK_ONLY at 8 threads, scaling eff 0.866 vs 0.824).  Under
-            # the old 8g heap the in-memory columnar fill GC-thrashed and
-            # DISK_ONLY won — storage level is env-tunable for small-heap
-            # deployments via SPEL_MENTIONS_STORAGE.
+            # fuse into one DAG; persist only small reused outputs and
+            # the wide mentions table (MENTIONS_STORAGE).
             if name in _EPHEMERAL_NO_PERSIST:
                 return df
             if name == "mentions":
-                return df.persist(mentions_storage_level())
+                return df.persist(MENTIONS_STORAGE)
             return df.persist()
         if resume and store.exists(name):
             return store.read(name)
@@ -136,9 +108,7 @@ def run_pipeline(
         return committed
 
     def build_mentions() -> DataFrame:
-        ext = extract_mentions_arrow if cfg.use_arrow_extractor else extract_mentions
-        m = ext(transcripts)
-        m = with_norm_surface(m, redirects)
+        m = with_norm_surface(extract_mentions(transcripts), redirects)
         return with_mention_id(m)
 
     mentions = stage("mentions", build_mentions)
@@ -146,15 +116,15 @@ def run_pipeline(
     blocks = stage("blocks", lambda: blocking_keys(surfaces))
     def build_pairs() -> DataFrame:
         if cfg.exact_pairs:
-            return salted_pairs(blocks, cfg.max_cell, cfg.max_salts)
-        return anchor_pairs(blocks, n_anchors=cfg.n_anchors)
+            return salted_pairs(blocks)
+        return anchor_pairs(blocks)
 
     pairs = stage("pairs", build_pairs)
     scores = stage("scores", lambda: score_pairs(pairs, cfg.use_cosine))
     edges = stage("edges", lambda: threshold_edges(scores, cfg.threshold))
 
     def build_clusters() -> DataFrame:
-        comps = connected_components(edges, store=None)
+        comps = connected_components(edges)
         return assign_clusters(mentions, surfaces, comps)
 
     return stage("clusters", build_clusters)

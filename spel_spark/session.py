@@ -76,11 +76,7 @@ def get_spark(
         # build side fits — avoids the sort of sort-merge for the many
         # mid-size equi-joins (band buckets, pair verify).  Size-gated by
         # Spark itself, so this is plan-quality, not a local-mode tune.
-        # Env-togglable for A/B (SPEL_PREFER_SMJ=true restores sort-merge).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPEL_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),

@@ -12,8 +12,7 @@ metric counts) a genuine gold-span input instead of synthetic data:
 
 Parser shape: each turtle block starts at ``<subject> a ...`` and carries
 one predicate per line; a running ``last(subject)`` window groups lines by
-block (the same ordered-scan pattern as the PPRforNED adapter,
-sources/resources.py).  This handles the NIF files GERBIL and the
+block.  This handles the NIF files GERBIL and the
 reference emit (one predicate per line, offset-based URIs); it is not a
 general RDF parser.
 """

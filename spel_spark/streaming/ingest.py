@@ -104,90 +104,3 @@ def start_mention_ingest(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def windowed_mention_counts(
-    stream: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """§2.9 event-time windowed aggregation with late-data handling:
-    per-(window, conv_id) turn counts + total text length.  The watermark
-    bounds state — a row later than ``watermark`` behind the max event
-    time is dropped rather than reopening its window, so state size is
-    O(active windows), not O(history) (the property that keeps this
-    running forever on a 100-TB/day stream).  Append output mode: a window
-    row is emitted exactly once, when the watermark passes its end."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.length(F.coalesce(F.col("text"), F.lit("")))).alias("n_chars"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "conv_id", "n_turns", "n_chars",
-        )
-    )
-
-
-CONV_STATS_OUTPUT_SCHEMA = (
-    "conv_id string, n_turns long, n_chars long, last_turn int"
-)
-CONV_STATS_STATE_SCHEMA = "n_turns long, n_chars long, last_turn int"
-
-
-def stateful_conversation_stats(
-    stream: DataFrame, idle_timeout_ms: int = 30 * 60 * 1000
-) -> DataFrame:
-    """§2.9 custom stateful operator: per-conversation running stats via
-    ``applyInPandasWithState`` (the north-star's named primitive for
-    stateful streaming).  State = (n_turns, n_chars, last_turn) per
-    conv_id, updated per micro-batch; each update emits the conversation's
-    new totals (output mode: update).  State is evicted after
-    ``idle_timeout_ms`` without new turns (ProcessingTimeTimeout), so the
-    store stays O(active conversations) on an unbounded stream.
-
-    The reference has no streaming at all (serving is one document per
-    locked HTTP request, src/gerbil_connect/server.py:45,88-116); this is
-    the Spark-native continuous analogue of its per-conversation
-    accumulation.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        # idle-timeout eviction: on an unbounded conv_id stream, NoTimeout
-        # state grows O(total distinct conversations ever seen) — this
-        # bounds it to O(conversations active within the timeout window)
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_turns, n_chars, last_turn = (
-            state.get if state.exists else (0, 0, -1)
-        )
-        for pdf in pdfs:
-            n_turns += len(pdf)
-            n_chars += int(pdf["text"].fillna("").str.len().sum())
-            if len(pdf):
-                last_turn = max(last_turn, int(pdf["turn_idx"].max()))
-        state.update((n_turns, n_chars, last_turn))
-        state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "conv_id": [key[0]],
-                "n_turns": [n_turns],
-                "n_chars": [n_chars],
-                "last_turn": [last_turn],
-            }
-        )
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        update,
-        outputStructType=CONV_STATS_OUTPUT_SCHEMA,
-        stateStructType=CONV_STATS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )

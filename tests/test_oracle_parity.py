@@ -65,6 +65,24 @@ def test_er_clusters_portable_is_discriminative(spark, ddb):
     assert merged.max() > len(df) / n_surfaces  # beyond one surface's share
 
 
+def test_candidate_filter_oracle_parity(spark, sf001_dir):
+    from spel_spark.queries import SQL_CANDIDATE_FILTER, q_candidate_filter
+
+    sdf = q_candidate_filter(spark, sf001_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW part AS SELECT * FROM read_parquet('{sf001_dir}/part.parquet')"
+    )
+    odf = con.execute(SQL_CANDIDATE_FILTER).df()
+    cols = sorted(sdf.columns)
+    a = sdf[cols].sort_values(by=cols, ignore_index=True)
+    b = odf[cols].sort_values(by=cols, ignore_index=True)
+    assert len(a) == len(b) > 0
+    # some predictions must actually be nulled and some kept
+    assert (a["entity_id"] == 0).any() and (a["entity_id"] != 0).any()
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
 def test_entry_runs(spark):
     import __spark_entry__ as E
 

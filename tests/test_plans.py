@@ -107,22 +107,6 @@ def test_jaro_winkler_query_is_arrow_only(spark, sf001_dir):
     assert_no_row_python(df)
 
 
-def test_windowed_stream_counts_plan_is_jvm_only(spark):
-    """Streaming windowed agg: stateful agg over window(ts), zero Python
-    (audited on the batch twin of the same expression tree)."""
-    import datetime as dt
-
-    from spel_spark.streaming.ingest import windowed_mention_counts
-
-    batch = spark.createDataFrame(
-        [("a", 0, "user", "x", None, dt.datetime(2026, 1, 1))],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-    df = windowed_mention_counts(batch)
-    assert "EvalPython" not in physical_plan(df)
-
-
 def test_ep1_evaluation_plan_is_jvm_only(spark):
     """EP1 composed lifecycle: every stage is builtins/windows — zero
     Python anywhere in the fallback-corpus plan."""

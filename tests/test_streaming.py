@@ -39,115 +39,3 @@ def test_streaming_matches_batch(spark, corpus, tmp_path):
     want_ids = sorted(r.mention_id for r in batch.select("mention_id").collect())
     assert got_ids == want_ids  # replayed turns deduped, none lost
 
-
-def test_stateful_conversation_stats(spark, corpus, tmp_path):
-    """applyInPandasWithState: state accumulates ACROSS micro-batches —
-    the second batch's totals must include the first batch's turns."""
-    from spel_spark.streaming.ingest import (
-        read_transcript_stream,
-        stateful_conversation_stats,
-    )
-
-    src = str(tmp_path / "src2")
-    ckpt = str(tmp_path / "ckpt2")
-    head = corpus.transcripts.head(200)
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    spark.createDataFrame(head.iloc[:100], schema=schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(head.iloc[100:], schema=schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=1)
-    stats = stateful_conversation_stats(stream)
-    q = (
-        stats.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("conv_stats")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.conv_id: (r.n_turns, r.n_chars, r.last_turn)
-        for r in spark.sql(
-            "SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY conv_id "
-            "ORDER BY n_turns DESC) rk FROM conv_stats) WHERE rk = 1"
-        ).collect()
-    }
-    want = {}
-    for _, row in head.iterrows():
-        n, c, l = want.get(row.conv_id, (0, 0, -1))
-        want[row.conv_id] = (
-            n + 1, c + len(row.text or ""), max(l, int(row.turn_idx))
-        )
-    assert got == want
-
-
-def test_windowed_counts_drop_late_data(spark, tmp_path):
-    """Event-time windowed agg (append mode): a closed window is emitted
-    once when the watermark passes it, and a row arriving later than the
-    watermark allows is DROPPED (never reopens the window).  Two
-    sequential availableNow runs share one checkpoint, so the watermark
-    persists between them exactly as between long-lived micro-batches."""
-    import datetime as dt
-
-    from spel_spark.streaming.ingest import (
-        read_transcript_stream,
-        windowed_mention_counts,
-    )
-
-    src = str(tmp_path / "wsrc")
-    sink = str(tmp_path / "wsink")
-    ckpt = str(tmp_path / "wckpt")
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-
-    def rows(*ts_texts):
-        return [
-            ("a", i, "user", txt, None, dt.datetime(2026, 1, 1, 10, mm, ss))
-            for i, (mm, ss, txt) in enumerate(ts_texts)
-        ]
-
-    def run_once():
-        stream = read_transcript_stream(spark, src)
-        q = (
-            windowed_mention_counts(stream, window="1 minute", watermark="2 minutes")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # run 1: two rows in the 10:00 window + one at 10:05 -> watermark
-    # advances to 10:03 (> 10:01), closing the first window
-    spark.createDataFrame(
-        rows((0, 10, "xx"), (0, 20, "yyy"), (5, 0, "z")), schema=schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    # run 2: a LATE row back in the 10:00 window (behind the persisted
-    # 10:03 watermark -> dropped) + one at 10:10 advancing the watermark
-    spark.createDataFrame(
-        rows((0, 30, "LATE!"), (10, 0, "w")), schema=schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    got = {
-        (r.win_start.minute, r.n_turns, r.n_chars)
-        for r in spark.read.parquet(sink).collect()
-    }
-    # the 10:00 window closed with ONLY the two on-time rows (2+3 chars);
-    # the late 5-char row did not reopen it.  The 10:10 window never
-    # closed (watermark ends at 10:08), so it must be absent.
-    assert (0, 2, 5) in got, got
-    assert not any(m == 10 for m, _, _ in got), got

@@ -1,6 +1,11 @@
-"""Result-identity harness for the optimization round: order-insensitive
-checksums (count + bit_xor of xxhash64 over every column) for every declared
+"""Result-identity harness: order-insensitive checksums for every declared
 query, so any plan rewrite is provably result-identical before/after.
+
+Per query: the row count ``n``, the ``bit_xor`` of each row's xxhash64
+``h``, and ``s``, the sum of the same hashes as ``decimal(38,0)``.  xor
+cancels a row that appears twice, so ``h`` alone is a set checksum; ``s``
+makes the checksum multiset-safe (the decimal sum cannot overflow under
+ANSI mode where a bigint sum would).
 
 Usage: python tools_checksum.py <sf_dir> <out.json> [query ...]
 """
@@ -34,14 +39,22 @@ def main() -> None:
             df = fn(spark, sf_dir)
             # deterministic column order; stringify doubles at full repr via
             # cast to string is LOCALE-free in Spark; hash the struct row
+            row_hash = F.xxhash64(F.to_json(F.struct(*df.columns)))
             row = df.agg(
                 F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64(F.to_json(F.struct(*df.columns)))).alias("h"),
+                F.bit_xor(row_hash).alias("h"),
+                F.sum(row_hash.cast("decimal(38,0)")).alias("s"),
             ).collect()[0]
-            results[name] = {"n": row["n"], "h": row["h"], "cols": df.columns}
+            results[name] = {
+                "n": row["n"],
+                "h": row["h"],
+                "s": None if row["s"] is None else str(row["s"]),
+                "cols": df.columns,
+            }
         except Exception as exc:  # noqa: BLE001
             results[name] = {"error": f"{type(exc).__name__}: {exc}"[:500]}
-        print(name, results[name].get("n"), results[name].get("h"), flush=True)
+        r = results[name]
+        print(name, r.get("n"), r.get("h"), r.get("s"), flush=True)
     with open(out_path, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
     spark.stop()
