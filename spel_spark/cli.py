@@ -9,7 +9,7 @@ Ships per the north rule as::
 (in local dev simply ``python -m spel_spark.cli ...``).
 
 Subcommands:
-  run          full ER pipeline over a transcripts parquet/Iceberg path
+  run          full ER pipeline over a transcripts parquet path
                with checkpointed stages + resume (default) under --output
   incremental  merge new transcript files into existing cluster state
                (streaming foreachBatch; the operational O(delta) mode —

@@ -1,7 +1,8 @@
 """End-to-end entity-resolution pipeline with checkpointed stages + resume.
 
-Stage DAG (each stage an atomic checkpoint + per-partition lineage rows,
-resumable from the last committed stage — north rule):
+Stage DAG (each stage a checkpoint committed by a ``_LATEST`` manifest
+swap + per-partition lineage rows, resumable from the last committed
+stage — north rule):
 
   transcripts
     -> mentions     (extract + normalize + redirect + mention_id)
@@ -13,18 +14,27 @@ resumable from the last committed stage — north rule):
     -> components   (large-star/small-star CC, per-iteration localCheckpoint)
     -> clusters     (mention -> canonical min-mention-id cluster)
 
+Each stage is committed under a fingerprint: a hash of the stage name, the
+config fields it reads, its upstream stages' fingerprints, the package
+version and the identity of the transcripts and redirects inputs.  Resume
+reuses a stage only on a fingerprint match, so a rerun under another
+config or input recomputes exactly the stages it affects.
+
 The reference's equivalent lifecycle is EP1 (SURVEY §3): per-document
 Python loop -> here, partition parallelism over conversations.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import spel_spark
 from spel_spark.io import CheckpointStore
 from spel_spark.operators.blocking import (
     anchor_pairs,
@@ -59,6 +69,26 @@ class PipelineConfig:
     exact_pairs: bool = False
 
 
+def _input_identity(spark: SparkSession, df: DataFrame | None) -> list | None:
+    """What ``df`` reads, comparable across processes: the canonicalized
+    analyzed plan text (tells filters apart, omits paths) plus the (path,
+    size, mtime) of every input file.  Without input files (a pandas
+    ``createDataFrame`` LocalRelation) ``semanticHash()`` is added — it
+    covers the rows; for a file scan it changes from process to process,
+    so it is left out there."""
+    if df is None:
+        return None
+    plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    files = []
+    for f in sorted(df.inputFiles()):
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        files.append([f, st.getLen(), st.getModificationTime()])
+    return [plan, files] if files else [plan, df.semanticHash()]
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -69,8 +99,8 @@ def run_pipeline(
 ) -> DataFrame:
     """Run (or resume) the full flow; returns the clusters DataFrame.
 
-    Resume: a stage whose checkpoint committed (atomic rename / Iceberg
-    snapshot) is read back instead of recomputed — the analogue of the
+    Resume: a stage whose committed fingerprint matches the one this run
+    computes is read back instead of recomputed — the analogue of the
     reference's continue_from_previous_checkpoint
     (src/spel/finetune_step_1.py:65-66).  ``store=None`` runs ephemerally
     (localCheckpoint only, no durability — for quick evaluations).
@@ -86,8 +116,16 @@ def run_pipeline(
     # more than the cache fill; surfaces (tiny) is read by blocks AND
     # assign; edges by CC's backend-selection count AND the collect.
     _EPHEMERAL_NO_PERSIST = {"scores", "clusters", "blocks", "pairs"}
+    inputs = None
+    if store is not None:
+        inputs = [_input_identity(spark, df) for df in (transcripts, redirects)]
+    # each stage reads the one before it (clusters also reads mentions and
+    # surfaces, both further upstream), so chaining the previous stage's
+    # fingerprint covers every upstream stage
+    fps: list[str] = []
 
-    def stage(name: str, build) -> DataFrame:
+    def stage(name: str, build, *fields: str) -> DataFrame:
+        """``fields``: the PipelineConfig fields ``build`` reads."""
         if store is None:
             df = build()
             # fuse into one DAG; persist only small reused outputs and
@@ -97,10 +135,16 @@ def run_pipeline(
             if name == "mentions":
                 return df.persist(MENTIONS_STORAGE)
             return df.persist()
-        if resume and store.exists(name):
+        blob = json.dumps([
+            name, {f: getattr(cfg, f) for f in fields}, fps[-1:], inputs,
+            spel_spark.__version__,
+        ])
+        fp = hashlib.sha256(blob.encode()).hexdigest()[:16]
+        fps.append(fp)
+        if resume and store.committed(name) == fp:
             return store.read(name)
         df = build()
-        store.write(df, name)
+        store.write(df, name, fp)
         committed = store.read(name)
         # score histogram lands in lineage for any stage carrying a score
         # column (scores, edges) — A13 / SURVEY §1.4
@@ -119,9 +163,9 @@ def run_pipeline(
             return salted_pairs(blocks)
         return anchor_pairs(blocks)
 
-    pairs = stage("pairs", build_pairs)
-    scores = stage("scores", lambda: score_pairs(pairs, cfg.use_cosine))
-    edges = stage("edges", lambda: threshold_edges(scores, cfg.threshold))
+    pairs = stage("pairs", build_pairs, "exact_pairs")
+    scores = stage("scores", lambda: score_pairs(pairs, cfg.use_cosine), "use_cosine")
+    edges = stage("edges", lambda: threshold_edges(scores, cfg.threshold), "threshold")
 
     def build_clusters() -> DataFrame:
         comps = connected_components(edges)

@@ -43,17 +43,27 @@ effectively-once, same discipline as ingest.start_mention_ingest):
   _lineage/       per-epoch per-partition lineage rows (epoch-partitioned
                   dynamic overwrite — a retried epoch replaces its own
                   audit rows, keeping the log effectively-once too)
-  _LATEST         manifest  JSON commit record (see ``_read_marker``)
+  _LATEST         manifest  JSON commit record (written by io._write_marker)
 
 The ``_LATEST`` manifest is the commit point and the O(1) answer to
 "what is the current state" — the moral equivalent of an Iceberg
-metadata-pointer swap.  It records which snapshot epoch and which
+metadata-pointer swap, and the same commit protocol the batch
+CheckpointStore uses.  It records which snapshot epoch and which
 clusters partitions are live, plus the same for the PREVIOUS commit so a
 retried epoch replays against exactly the inputs its first attempt saw
-even after retention has pruned everything older.  Snapshot tables keep
-only the {previous, current} epochs; clusters keeps only the partitions
-the current+previous manifests reference — state size is bounded
-regardless of epoch count.
+even after retention has pruned everything older.  Fields:
+
+  epoch               id of the epoch this manifest belongs to
+  committed           False between merge start and commit (a reader
+                      seeing False serves the PREVIOUS consistent view)
+  prev_epoch          snapshot epoch that was the input to ``epoch``
+  cluster_epochs      clusters partitions composing the current view
+  prev_cluster_epochs clusters partitions composing the previous view
+                      (retry inputs — retained until the NEXT commit)
+
+Snapshot tables keep only the {previous, current} epochs; clusters keeps
+only the partitions the current+previous manifests reference — state size
+is bounded regardless of epoch count.
 
 Production deployment would keep these as Iceberg tables (MERGE INTO for
 the snapshots, snapshot expiry for retention, RewriteDataFiles for
@@ -63,14 +73,13 @@ the same commit semantics without the catalog dependency.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spel_spark.io import CheckpointStore
+from spel_spark.io import _MARKER, CheckpointStore, _read_marker, _write_marker
 from spel_spark.operators.ann import salted_bipartite_id_pairs
 from spel_spark.operators.blocking import blocking_keys, surface_nodes
 from spel_spark.operators.clustering import (
@@ -176,61 +185,6 @@ def _assert_epoch_partition(path: str, epoch: int) -> None:
             f"state manifest references epoch {epoch} of {path!r} but that "
             "partition is missing — state dir corrupted or partially deleted"
         )
-
-
-# ---------------------------------------------------------------------------
-# _LATEST manifest: the commit record (Iceberg metadata-pointer analogue)
-# ---------------------------------------------------------------------------
-
-_MARKER = "_LATEST"
-
-
-def _read_marker(state_dir: str) -> dict | None:
-    """The commit manifest, or None for a virgin state dir.  Fields:
-
-      epoch               id of the epoch this manifest belongs to
-      committed           False between merge start and commit (a reader
-                          seeing False serves the PREVIOUS consistent view)
-      prev_epoch          snapshot epoch that was the input to ``epoch``
-      cluster_epochs      clusters partitions composing the current view
-      prev_cluster_epochs clusters partitions composing the previous view
-                          (retry inputs — retained until the NEXT commit)
-    """
-    p = os.path.join(state_dir, _MARKER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        try:
-            return json.load(f)
-        except json.JSONDecodeError as exc:
-            raise ValueError(
-                f"corrupt {_MARKER} manifest in {state_dir!r} ({exc}) — "
-                "the commit record is unreadable; restore it from a backup "
-                "or start a fresh state dir"
-            ) from exc
-
-
-def _write_marker(state_dir: str, marker: dict) -> None:
-    """Atomic manifest swap (POSIX rename — on an object store this is
-    the catalog's atomic metadata-pointer update).  The temp file is
-    fsync'd before the rename (and the directory after) so a power loss
-    cannot leave an empty/truncated manifest behind the commit point."""
-    os.makedirs(state_dir, exist_ok=True)
-    p = os.path.join(state_dir, _MARKER)
-    tmp = p + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(marker, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
-    try:
-        dfd = os.open(state_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError:
-        pass  # directory fsync unsupported on some filesystems — best effort
 
 
 def _epoch_inputs(marker: dict | None, state_dir: str, epoch: int) -> tuple:
@@ -363,9 +317,7 @@ def merge_batch(
     state_dir: str,
     epoch: int,
     threshold: float = DEFAULT_THRESHOLD,
-    max_cell: int = 1024,
     compact_every: int = 8,
-    lineage: bool = True,
 ) -> DataFrame:
     """Merge one micro-batch of extracted mentions into the state and
     return the (lazily) resolved full clusters DataFrame.
@@ -409,7 +361,7 @@ def merge_batch(
             "prev_cluster_epochs": list(prev_cluster_epochs),
         },
     )
-    store = CheckpointStore(spark, state_dir, backend="parquet") if lineage else None
+    store = CheckpointStore(spark, state_dir)
 
     m = batch_mentions.persist()
     _write_epoch(m, _path(state_dir, "mentions"), epoch)
@@ -464,7 +416,6 @@ def merge_batch(
             "n_id",
             "o_id",
             key_col="block_key",
-            max_cell=max_cell,
         )
         .filter(F.col("n_id") != F.col("o_id"))
         .select(
@@ -512,7 +463,7 @@ def merge_batch(
     # O(delta) assignment: diff this epoch's surface->cluster mapping
     # (tiny) against the previous epoch's, and touch prior mentions ONLY
     # for surfaces whose cluster id changed
-    sc_new = surface_clusters(merged_surf, comps).persist()
+    sc_new = surface_clusters(merged_surf, comps)
     _write_epoch(sc_new, _path(state_dir, "surf_clusters"), epoch)
     sc_new = (  # committed bytes: the diff + assigns must not re-run CC joins
         _read_state(
@@ -593,32 +544,31 @@ def merge_batch(
         _write_epoch(delta, _path(state_dir, "clusters"), epoch)
         cluster_epochs = [int(e) for e in prev_cluster_epochs] + [epoch]
 
-    if store is not None:
-        # per-epoch lineage (north rule: per-partition rows + score
-        # histograms) — every input here is committed or persisted, so the
-        # lineage aggregations are narrow scans, not stage re-runs.  One
-        # dynamic-overwrite write per epoch: a RETRIED epoch replaces its
-        # own lineage partition instead of appending duplicate audit rows
-        # (state commits are effectively-once; the audit log must be too).
-        extra = {"epoch": epoch}
-        committed_delta = (
-            _read_state(spark, _path(state_dir, "clusters"), _st(CLUSTERS_SCHEMA))
-            .filter(F.col("epoch") == epoch)
-        )
-        frames = [
-            store.lineage_frame("inc_mentions", m, extra=extra),
-            store.lineage_frame("inc_new_blocks", new_blocks, extra=extra),
-            store.lineage_frame("inc_edges", new_edges, extra=extra, score_col="score"),
-            store.lineage_frame(
-                "inc_clusters_full" if compacting else "inc_clusters_delta",
-                committed_delta,
-                extra=extra,
-            ),
-        ]
-        lin = frames[0]
-        for fr in frames[1:]:
-            lin = lin.unionByName(fr)
-        _write_epoch(lin, _path(state_dir, "_lineage"), epoch)
+    # per-epoch lineage (north rule: per-partition rows + score
+    # histograms) — every input here is committed or persisted, so the
+    # lineage aggregations are narrow scans, not stage re-runs.  One
+    # dynamic-overwrite write per epoch: a RETRIED epoch replaces its
+    # own lineage partition instead of appending duplicate audit rows
+    # (state commits are effectively-once; the audit log must be too).
+    extra = {"epoch": epoch}
+    committed_delta = (
+        _read_state(spark, _path(state_dir, "clusters"), _st(CLUSTERS_SCHEMA))
+        .filter(F.col("epoch") == epoch)
+    )
+    frames = [
+        store.lineage_frame("inc_mentions", m, extra=extra),
+        store.lineage_frame("inc_new_blocks", new_blocks, extra=extra),
+        store.lineage_frame("inc_edges", new_edges, extra=extra, score_col="score"),
+        store.lineage_frame(
+            "inc_clusters_full" if compacting else "inc_clusters_delta",
+            committed_delta,
+            extra=extra,
+        ),
+    ]
+    lin = frames[0]
+    for fr in frames[1:]:
+        lin = lin.unionByName(fr)
+    _write_epoch(lin, _path(state_dir, "_lineage"), epoch)
 
     # COMMIT: atomic manifest swap, then retention of everything the
     # current+previous manifests no longer reference (prev inputs stay one

@@ -115,7 +115,7 @@ def test_streaming_incremental_er_matches_batch(spark, corpus, tmp_path):
 import json
 import os
 
-from spel_spark.streaming.incremental import _read_marker
+from spel_spark.io import _read_marker
 
 
 def _epoch_dirs(path):
@@ -333,3 +333,20 @@ def test_lineage_retry_does_not_duplicate_rows(spark, corpus, tmp_path):
         for r in spark.read.parquet(f"{state}/_lineage").collect()
     )
     assert retried == first
+
+
+def test_merge_batch_leaves_no_persisted_rdds(spark, corpus, tmp_path):
+    """merge_batch unpersists everything it persists: no RDD persisted
+    during an epoch is still held after it.  Compared as id sets, not
+    sizes: RDDs that earlier tests left behind may be released by Spark's
+    cleaner while an epoch runs."""
+    state = str(tmp_path / "state_cache")
+    pdf = corpus.transcripts.head(300)
+
+    def held():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for epoch, part in enumerate((pdf.iloc[:100], pdf.iloc[100:200], pdf.iloc[200:])):
+        before = held()
+        merge_batch(spark, _mentions(spark, part), state, epoch=epoch)
+        assert held() - before == set(), epoch

@@ -53,7 +53,7 @@ def test_offsets_round_trip(spark, transcripts_df):
 def test_per_turn_text_equality_through_store(spark, transcripts_df, store):
     """north rule: per-turn text equality under stable ordering, end-to-end
     through a checkpoint write+read."""
-    store.write(transcripts_df, "transcripts")
+    store.write(transcripts_df, "transcripts", "fp0")
     back = store.read("transcripts")
     src = transcripts_df.select("conv_id", "turn_idx", "text")
     rt = back.select("conv_id", "turn_idx", "text")
