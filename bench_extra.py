@@ -99,9 +99,10 @@ def run_stages():
         len_ok = F.least("a_n_toks", "b_n_toks") >= F.lit(0.8) * F.greatest(
             "a_n_toks", "b_n_toks"
         )
+        # default-mode dedup of the candidates, ids only
         return salted_id_pairs(
             bands_df, id_col="doc_id", key_col="band", carry=("n_toks",), pair_filter=len_ok
-        )
+        ).select("a_id", "b_id")
 
     _timed(spark, "cands_distinct", cands_predistinct)
     _timed(spark, "full_minhash_pairs", lambda: minhash_near_dup_pairs(docs))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spel_spark.functions.similarity import cosine_sim
+from spel_spark.operators.blocking import salted_bipartite_id_pairs
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
@@ -67,54 +68,6 @@ def with_lsh_signature(
     return vecs.withColumn("lsh_sig", sig)
 
 
-def salted_bipartite_id_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    key_col: str = "band",
-    max_cell: int = 1024,
-    max_salts: int = 64,
-) -> DataFrame:
-    """Skew-salted bipartite equi-join on ``key_col``, ids only.
-
-    The two-table analogue of blocking.salted_id_pairs: the RIGHT
-    (corpus) side of each bucket is split into ceil(n/max_cell) salt
-    cells, and every LEFT (query) row in that bucket is replicated across
-    the cells — each join task sees at most ``max_cell`` right rows per
-    key.  AQE skew-join can't save a hot LSH bucket here because both
-    sides of the bucket grow together; explicit salting bounds the cell
-    no matter how degenerate the bucket.  Output: distinct
-    (left_id, right_id) candidate pairs — payloads (vectors) are joined
-    back by the caller on the survivors only.
-    """
-    counts = right.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_members"))
-    n_salts = F.least(
-        F.greatest(F.ceil(F.col("n_members") / max_cell), F.lit(1)),
-        F.lit(max_salts),
-    ).cast("int")
-    r_side = (
-        right.join(counts, key_col)
-        .withColumn("n_salts", n_salts)
-        .withColumn(
-            "salt",
-            F.pmod(F.xxhash64(right_id, F.lit(11)), F.col("n_salts")).cast("int"),
-        )
-        .select(key_col, right_id, "salt")
-    )
-    l_side = (
-        left.join(counts, key_col)  # inner: keys absent on the right match nothing
-        .withColumn("n_salts", n_salts)
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)))
-        .select(key_col, left_id, "salt")
-    )
-    return (
-        l_side.join(r_side, [key_col, "salt"])
-        .select(left_id, right_id)
-        .distinct()
-    )
-
-
 def ann_lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -130,10 +83,11 @@ def ann_lsh_topk(
 
     Scale shape: the band explode and bucket join carry ONLY (id, band) —
     never the vectors — and the join is skew-salted
-    (salted_bipartite_id_pairs), so a hot bucket costs bounded cells of
-    16-byte rows instead of replicated float arrays.  Vectors are joined
-    back on the deduplicated surviving candidates for the exact-cosine
-    verify (same ids-first discipline as dedup.minhash_near_dup_pairs).
+    (blocking.salted_bipartite_id_pairs), so a hot bucket costs bounded
+    cells of 16-byte rows instead of replicated float arrays.  A query
+    meets a neighbour once per shared band: the directed (q_id, nbr_id)
+    pairs are deduplicated, then vectors joined back on the survivors for
+    the exact-cosine verify (ids-first, as dedup.minhash_near_dup_pairs).
 
     Returns (q_id, nbr_id, rk, cos).  Recall vs brute force is measured in
     tests (tests/test_ann.py) — raise n_bits/bands for higher recall.
@@ -157,7 +111,7 @@ def ann_lsh_topk(
 
     cands = salted_bipartite_id_pairs(
         banded(queries, "q_id"), banded(embeddings, "nbr_id"), "q_id", "nbr_id"
-    ).filter(F.col("q_id") != F.col("nbr_id"))
+    ).distinct().filter(F.col("q_id") != F.col("nbr_id"))
     qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_v"))
     ev = embeddings.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_v"))
     scored = (
@@ -274,12 +228,12 @@ def ann_ivf_topk(
     an equi-join on cell, and the re-rank is a window top-k.  Centroids
     ride along as broadcast literals (nlist x dim — bytes, not data).
 
-    The probe join is SKEW-SALTED (salted_bipartite_id_pairs keyed by
-    cell, ids only): cell population is data-dependent, and a corpus whose
-    embeddings collapse into one k-means cell (near-duplicate-heavy
-    training corpora — exactly where dedup pipelines run) would otherwise
-    concentrate the whole join on one key carrying full vectors
-    (round-3 verdict #3).  Vectors are joined back on the surviving
+    The probe join is SKEW-SALTED (blocking.salted_bipartite_id_pairs
+    keyed by cell, ids only, deduplicated as directed pairs): cell
+    population is data-dependent, and a corpus whose embeddings collapse
+    into one k-means cell (near-duplicate-heavy training corpora — exactly
+    where dedup pipelines run) would otherwise concentrate the whole join
+    on one key carrying full vectors (round-3 verdict #3).  Vectors are joined back on the surviving
     candidate ids only — the same ids-first discipline as the LSH path.
 
     Returns (q_id, nbr_id, rk, cos); recall vs brute force is measured in
@@ -319,12 +273,8 @@ def ann_ivf_topk(
         )
     )
     cands = salted_bipartite_id_pairs(
-        probe.select("q_id", "cell"),
-        inv.select("nbr_id", "cell"),
-        "q_id",
-        "nbr_id",
-        key_col="cell",
-    ).filter(F.col("q_id") != F.col("nbr_id"))
+        probe.select("q_id", "cell"), inv.select("nbr_id", "cell"), "q_id", "nbr_id", "cell"
+    ).distinct().filter(F.col("q_id") != F.col("nbr_id"))
     qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_v"))
     scored = (
         cands.join(qv, "q_id")

@@ -106,6 +106,22 @@ def blocking_keys(surfaces: DataFrame) -> DataFrame:
     )
 
 
+def _salt_sized(df: DataFrame, counted: DataFrame, key_cols, max_cell, max_salts):
+    """``df`` inner-joined to its key's size in ``counted``: ``n_members``
+    (rows of ``counted`` under the key) and ``n_salts`` = ceil(n/max_cell)
+    clamped to [1, max_salts] — the one salt-sizing policy of every
+    candidate-pair join (triangle: ``counted`` is ``df``; bipartite: both
+    sides are sized by the corpus side)."""
+    counts = counted.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_members"))
+    return df.join(counts, key_cols).withColumn(
+        "n_salts",
+        F.least(
+            F.greatest(F.ceil(F.col("n_members") / max_cell), F.lit(1)),
+            F.lit(max_salts),
+        ).cast("int"),
+    )
+
+
 def salted_id_pairs(
     blocks: DataFrame,
     id_col: str = "id",
@@ -116,56 +132,38 @@ def salted_id_pairs(
     pair_filter=None,
     first_shared_key=None,
 ) -> DataFrame:
-    """Payload-free triangle-salted self-join: all unordered id pairs
-    sharing a key, deduplicated across keys.  Output (a_id, b_id).
+    """Triangle-salted self-join: every unordered pair of ``id_col``
+    sharing a key, once.  Output (a_id, b_id, a_<c>.., b_<c>..), a_id < b_id.
 
-    The id-only core of :func:`salted_pairs` for callers that join their
-    payload back afterwards (e.g. document token sets, which are far too
-    wide to replicate through the salt cells).  A block of n members with
-    S salts becomes S*(S+1)/2 bounded cells joined independently — no
-    single task ever sees a whole hot bucket (degenerate LSH buckets are
-    the doc-dedup analogue of hot mention surfaces).
+    A member with salt s sits on the A side of cells (s, j), j >= s, and
+    the B side of cells (i, s), i <= s: the S*(S+1)/2 cells of a block
+    meet every pair, and off-diagonal cells yield a pair in ONE
+    orientation (A = smaller salt), so pairs are canonicalized by id.
 
-    ``key_col`` is a single column name or a sequence of names (composite
-    bucket key, e.g. ``("slot", "bandh")`` — narrow typed columns join
-    faster than concatenated strings and carry the band slot for the
-    emit-once filter below).
+    ``key_col`` is a column name or a sequence of names (composite bucket
+    key, e.g. ``("slot", "bandh")``: narrow typed columns join faster than
+    concatenated strings and carry the band slot for emit-once below).
 
-    ``carry`` names narrow scalar columns of ``blocks`` (e.g. a token
-    count) replicated through the cells as ``a_<c>``/``b_<c>`` so that
-    ``pair_filter`` — a SYMMETRIC boolean Column over them — can prune
-    pairs BEFORE the dedup shuffle (the widest shuffle of the flow).
-    Symmetry is required because the filter runs before the (a, b)
-    canonicalization.
+    ``carry`` names narrow scalar columns of ``blocks`` replicated through
+    the cells as ``a_<c>``/``b_<c>`` and swapped with the ids, so that
+    ``pair_filter`` — a SYMMETRIC boolean Column over them (it runs before
+    canonicalization) — prunes pairs BEFORE the dedup.
 
-    Cross-key dedup, two modes (guide §2.3/§2.4 — the dedup shuffle was
-    the widest exchange of the whole dedup flow):
+    Cross-key dedup, two modes (guide §2.3/§2.4):
 
-    * default — ``.distinct()`` on (a_id, b_id): one full shuffle of
-      every surviving joined row (measured at sf0.1: 27M rows in, 5.6M
-      out — a dense near-dup corpus emits each pair from ~5 of 8 bands).
-    * ``first_shared_key`` — a SYMMETRIC int Column over carried
-      ``a_*``/``b_*`` columns giving the 0-based FIRST band slot the two
-      members share.  A pair is kept only where that slot equals the
-      bucket's own slot (the first element of the composite key), so each
-      unordered pair is emitted exactly once across keys AND cells with
-      no distinct shuffle at all.  Requires a composite ``key_col`` whose
-      FIRST column is the band-slot index.  In this mode the canonically
-      swapped carry columns ride along in the output (callers verify
-      inline instead of re-joining payloads).
+    * default — group by (a_id, b_id), which shuffles every joined row;
+      the key columns come out holding the SMALLEST key the pair shares.
+    * ``first_shared_key`` — a SYMMETRIC int Column over carried columns
+      giving the 0-based FIRST band slot the two members share; a pair is
+      kept only in the bucket of that slot (the FIRST column of a
+      composite ``key_col``), so it is emitted exactly once with no dedup
+      shuffle (sf0.1: 27M joined rows -> 5.6M pairs; a dense near-dup
+      corpus emits a pair from ~5 of 8 bands).  No key columns are output.
     """
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
-    counts = blocks.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_members"))
     sized = (
-        blocks.join(counts, key_cols)
+        _salt_sized(blocks, blocks, key_cols, max_cell, max_salts)
         .filter(F.col("n_members") > 1)
-        .withColumn(
-            "n_salts",
-            F.least(
-                F.greatest(F.ceil(F.col("n_members") / max_cell), F.lit(1)),
-                F.lit(max_salts),
-            ).cast("int"),
-        )
         .withColumn(
             "salt", F.pmod(F.xxhash64(id_col, F.lit(7)), F.col("n_salts")).cast("int")
         )
@@ -187,107 +185,81 @@ def salted_id_pairs(
     joined = a_side.join(b_side, [*key_cols, "i", "j"])
     if first_shared_key is None:
         joined = joined.filter(F.col("a_id") != F.col("b_id"))
-        if pair_filter is not None:
-            joined = joined.filter(pair_filter)
-        return joined.select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        ).distinct()
-    # emit-once mode.  Within one bucket, triangle replication yields each
-    # unordered pair once in off-diagonal cells (orientation fixed by
-    # salt) and BOTH orientations in the diagonal cell — a_id < b_id
-    # there keeps one (and drops self-pairs).  Across buckets, a member
-    # sits in exactly one bucket per slot, so keeping the pair only in
-    # its first shared slot makes the global emission exactly-once: the
-    # union over buckets is reproduced without the distinct shuffle.
-    joined = joined.filter(
-        (F.col("i") != F.col("j")) | (F.col("a_id") < F.col("b_id"))
-    ).filter(F.col(key_cols[0]) == first_shared_key)
+    else:
+        # emit-once.  The diagonal cell holds BOTH orientations of its
+        # pairs — a_id < b_id there keeps one (and drops self-pairs).  A
+        # member sits in exactly one bucket per slot, so keeping the pair
+        # only in its first shared slot emits it exactly once globally.
+        joined = joined.filter(
+            (F.col("i") != F.col("j")) | (F.col("a_id") < F.col("b_id"))
+        ).filter(F.col(key_cols[0]) == first_shared_key)
     if pair_filter is not None:
         joined = joined.filter(pair_filter)
     a_lt = F.col("a_id") < F.col("b_id")
-    return joined.select(
-        F.when(a_lt, F.col("a_id")).otherwise(F.col("b_id")).alias("a_id"),
-        F.when(a_lt, F.col("b_id")).otherwise(F.col("a_id")).alias("b_id"),
-        *[
-            F.when(a_lt, F.col(f"a_{c}")).otherwise(F.col(f"b_{c}")).alias(f"a_{c}")
-            for c in carry
-        ],
-        *[
-            F.when(a_lt, F.col(f"b_{c}")).otherwise(F.col(f"a_{c}")).alias(f"b_{c}")
-            for c in carry
-        ],
+    swap = [("a_id", "b_id"), ("b_id", "a_id")]
+    swap += [(f"a_{c}", f"b_{c}") for c in carry] + [(f"b_{c}", f"a_{c}") for c in carry]
+    pairs = [F.when(a_lt, F.col(x)).otherwise(F.col(y)).alias(x) for x, y in swap]
+    carried = [x for x, _ in swap[2:]]
+    if first_shared_key is not None:
+        return joined.select(*pairs)
+    return (
+        joined.select(*pairs, F.struct(*key_cols).alias("_key"))
+        .groupBy("a_id", "b_id")
+        .agg(*[F.first(c).alias(c) for c in carried], F.min("_key").alias("_key"))
+        .select("a_id", "b_id", *carried, "_key.*")
     )
 
 
-def salted_pairs(
-    blocks: DataFrame,
+def salted_bipartite_id_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    key_col: str = "band",
     max_cell: int = 1024,
     max_salts: int = 64,
 ) -> DataFrame:
+    """Skew-salted bipartite equi-join on ``key_col``, ids only.
+
+    The two-table analogue of :func:`salted_id_pairs`: the RIGHT (corpus)
+    side of each bucket is split into n_salts cells, and every LEFT
+    (query) row in that bucket is replicated across the cells — each join
+    task sees at most ``max_cell`` right rows per key.  AQE skew-join
+    can't save a hot bucket here because both sides grow together.
+    Output: (left_id, right_id) once per shared key, NOT deduplicated —
+    each caller dedups once, in the form it needs.  Payloads (vectors,
+    surface forms) are joined back by the caller on the survivors.
+    """
+    r_side = (
+        _salt_sized(right, right, [key_col], max_cell, max_salts)
+        .withColumn(
+            "salt",
+            F.pmod(F.xxhash64(right_id, F.lit(11)), F.col("n_salts")).cast("int"),
+        )
+        .select(key_col, right_id, "salt")
+    )
+    # inner: keys absent on the right match nothing
+    l_side = (
+        _salt_sized(left, right, [key_col], max_cell, max_salts)
+        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)))
+        .select(key_col, left_id, "salt")
+    )
+    return l_side.join(r_side, [key_col, "salt"]).select(left_id, right_id)
+
+
+def salted_pairs(blocks: DataFrame, max_cell: int = 1024, max_salts: int = 64) -> DataFrame:
     """All unordered surface pairs sharing a block key, skew-salted.
 
-    blocks: (surface_id, norm_surface, block_key).
-    Output: (a_id, b_id, a_norm, b_norm, block_key) with a_id < b_id,
-    deduplicated across key families.
-
-    Triangle replication: member with salt s appears on the A side of
-    cells (s, j) for j >= s and the B side of cells (i, s) for i <= s;
-    equi-join on (block_key, i, j) then a_id < b_id keeps each pair once.
+    blocks: (surface_id, norm_surface, block_key).  Output: (a_id, b_id,
+    a_norm, b_norm, block_key), a_id < b_id, one row per pair.
     """
     # consumed by three plan branches (counts + both join sides): persist
     # the narrow projection so the upstream (scan + normalize + banding)
     # is expanded once, not three times (see anchor_pairs for the audit)
-    blocks = blocks.select(
-        "surface_id", "norm_surface", "block_key"
-    ).persist()
-    counts = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n_members"))
-    sized = (
-        blocks.join(counts, "block_key")
-        .filter(F.col("n_members") > 1)
-        .withColumn(
-            "n_salts",
-            F.least(
-                F.greatest(F.ceil(F.col("n_members") / max_cell), F.lit(1)),
-                F.lit(max_salts),
-            ).cast("int"),
-        )
-        .withColumn("salt", F.pmod(F.xxhash64("surface_id", F.lit(7)), F.col("n_salts")).cast("int"))
-    )
-    a_side = sized.select(
-        "block_key",
-        F.col("surface_id").alias("a_id"),
-        F.col("norm_surface").alias("a_norm"),
-        F.col("salt").alias("i"),
-        F.explode(F.sequence(F.col("salt"), F.col("n_salts") - 1)).alias("j"),
-    )
-    b_side = sized.select(
-        "block_key",
-        F.col("surface_id").alias("b_id"),
-        F.col("norm_surface").alias("b_norm"),
-        F.explode(F.sequence(F.lit(0), F.col("salt"))).alias("i"),
-        F.col("salt").alias("j"),
-    )
-    # off-diagonal cells yield each pair in ONE orientation (A = smaller
-    # salt); canonicalize by id instead of filtering, else half the
-    # cross-salt pairs would be lost
-    joined = a_side.join(b_side, ["block_key", "i", "j"]).filter(
-        F.col("a_id") != F.col("b_id")
-    )
-    a_lt = F.col("a_id") < F.col("b_id")
-    pairs = joined.select(
-        F.when(a_lt, F.col("a_id")).otherwise(F.col("b_id")).alias("a_id"),
-        F.when(a_lt, F.col("b_id")).otherwise(F.col("a_id")).alias("b_id"),
-        F.when(a_lt, F.col("a_norm")).otherwise(F.col("b_norm")).alias("a_norm"),
-        F.when(a_lt, F.col("b_norm")).otherwise(F.col("a_norm")).alias("b_norm"),
-        "block_key",
-    )
-    # dedup across key families: one row per unordered pair
-    return pairs.groupBy("a_id", "b_id").agg(
-        F.first("a_norm").alias("a_norm"),
-        F.first("b_norm").alias("b_norm"),
-        F.min("block_key").alias("block_key"),
-    )
+    blocks = blocks.select("surface_id", "norm_surface", "block_key").persist()
+    return salted_id_pairs(
+        blocks, "surface_id", max_cell=max_cell, max_salts=max_salts, carry=("norm_surface",)
+    ).toDF("a_id", "b_id", "a_norm", "b_norm", "block_key")
 
 
 def anchor_pairs(
@@ -325,8 +297,8 @@ def anchor_pairs(
     ).persist()
     counts = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n_members"))
     # persist: the sized-blocks table is consumed by FIVE plan branches
-    # (small -> salted_pairs' counts + both join sides; big -> anchor
-    # election + member join).  Unpersisted, each branch re-expanded the
+    # (small -> the triangle join's size count + both of its sides via
+    # salted_pairs; big -> anchor election + member join).  Unpersisted, each branch re-expanded the
     # whole upstream — parquet scan + normalize + 16-hash MinHash banding
     # — so one query planned 5 scans of the base table (r6 plan audit:
     # pairs_engine had 68 Exchanges / 5 Scans; with the persist the

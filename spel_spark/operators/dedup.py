@@ -113,11 +113,11 @@ def simhash_candidate_pairs(
     """Near-dup candidates: equal 16-bit band -> verify popcount(xor).
 
     Candidate generation routes through the TRIANGLE-SALTED id-only
-    self-join (blocking.salted_id_pairs) — the same skew treatment as the
-    MinHash path below.  A degenerate band value (e.g. a boilerplate-heavy
-    corpus slice where one 16-bit band collides for 10^5 documents) would
-    otherwise recreate the hot-key blowup in a single join task; salting
-    bounds every cell.
+    self-join (blocking.salted_id_pairs, emit-once mode) — the salting
+    core every candidate-pair join shares.  A degenerate band value (e.g.
+    a boilerplate-heavy corpus slice where one 16-bit band collides for
+    10^5 documents) would otherwise recreate the hot-key blowup in a
+    single join task; salting bounds every cell.
 
     Emit-once plan (r6, guide §2.3/§2.4): the 8-byte simhash rides
     THROUGH the salt cells as a carry column, so the popcount verify is

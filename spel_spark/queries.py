@@ -1877,10 +1877,11 @@ def q_er_clusters_portable(spark, sf_dir):
     -> min-mention-id cluster assignment with singleton fallback.
 
     Engine operators are used wherever they are portable (salted_pairs,
-    score_pairs kernels, connected_components); the two engine-internal
-    substitutions are declared: surface ids are min-mention-ids instead
-    of xxhash64 (bit-identical semantics, DuckDB-reproducible) and the
-    LSH bands use the md5 minhash (MD5_SEEDS) instead of xxhash64 seeds.
+    i.e. the salted_id_pairs core, score_pairs kernels, connected
+    components); the two engine-internal substitutions are declared:
+    surface ids are min-mention-ids instead of xxhash64 (bit-identical
+    semantics, DuckDB-reproducible) and the LSH bands use the md5 minhash
+    (MD5_SEEDS) instead of xxhash64 seeds.
     Scoring comparisons happen on floor-scaled BIGINT features so the
     threshold crossing is EXACT in both engines.
 

@@ -8,8 +8,9 @@ ONCE in batch, then each arriving micro-batch only pays for what it adds —
 
 * pair generation is DELTA-BIPARTITE: surfaces first seen in this batch
   join against the full block index (new x all, skew-salted ids-only via
-  ann.salted_bipartite_id_pairs); old x old pairs were generated when
-  their newer member first arrived, so the union over epochs is EXACTLY
+  blocking.salted_bipartite_id_pairs, deduplicated once as canonical
+  unordered pairs); old x old pairs were generated when their newer
+  member first arrived, so the union over epochs is EXACTLY
   the batch pair set (every unordered pair materializes at the epoch its
   later member appears — an induction the equality test pins);
 * connected components runs on the STAR-CONTRACTED graph: previous
@@ -80,8 +81,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spel_spark.io import _MARKER, CheckpointStore, _read_marker, _write_marker
-from spel_spark.operators.ann import salted_bipartite_id_pairs
-from spel_spark.operators.blocking import blocking_keys, surface_nodes
+from spel_spark.operators.blocking import (
+    blocking_keys,
+    salted_bipartite_id_pairs,
+    surface_nodes,
+)
 from spel_spark.operators.clustering import (
     assign_mentions,
     connected_components,
@@ -396,7 +400,9 @@ def merge_batch(
     )
 
     # delta-bipartite candidate generation: NEW surfaces vs the full block
-    # index (ids only through the salt cells; norms joined back after)
+    # index (ids only through the salt cells; norms joined back after).
+    # A pair meets once per shared key and new x new pairs in both
+    # orientations: the one canonical distinct below dedups both.
     new_blocks = blocking_keys(new_surf).select(
         "surface_id", "norm_surface", "block_key"
     ).persist()

@@ -38,38 +38,6 @@ def test_lsh_topk_recall_vs_brute_force(spark, vecs):
     assert recall >= 0.5, recall  # 4 bands x 4 bits on 64-dim embeddings
 
 
-def test_salted_bipartite_pairs_match_naive_on_hot_key(spark):
-    """Skew gate for the LSH bucket join: one hot band key shared by 200
-    corpus rows and 20 queries, max_cell forced tiny (8) so the hot key
-    splits into many salt cells.  Salted output must equal the naive
-    bipartite equi-join exactly."""
-    from spel_spark.operators.ann import salted_bipartite_id_pairs
-
-    right = spark.createDataFrame(
-        [(i, "hot") for i in range(200)] + [(i, f"cold{i % 7}") for i in range(200, 260)],
-        "nbr_id long, band string",
-    )
-    left = spark.createDataFrame(
-        [(i, "hot") for i in range(20)] + [(201, "cold3"), (202, "coldX")],
-        "q_id long, band string",
-    )
-    got = {
-        (r.q_id, r.nbr_id)
-        for r in salted_bipartite_id_pairs(
-            left, right, "q_id", "nbr_id", max_cell=8
-        ).collect()
-    }
-    want = {
-        (ql, nr)
-        for ql, qb in [(r.q_id, r.band) for r in left.collect()]
-        for nr, nb in [(r.nbr_id, r.band) for r in right.collect()]
-        if qb == nb
-    }
-    assert got == want
-    n_cold3 = sum(1 for i in range(200, 260) if i % 7 == 3)
-    assert len(want) == 20 * 200 + n_cold3  # hot block + cold3; coldX matches nothing
-
-
 def test_lsh_band_join_carries_ids_only(spark, vecs):
     """Scale shape: the banded bucket join must not replicate vectors
     through the explode — vector columns may only be joined back AFTER

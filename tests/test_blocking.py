@@ -1,13 +1,17 @@
-"""Blocking: LSH determinism, seed independence, salted self-join == naive."""
+"""Blocking: LSH determinism, seed independence, salted joins == naive."""
 
+import math
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spel_spark.operators.blocking import (
     LSH_SEEDS,
     blocking_keys,
     minhash_signature,
+    salted_bipartite_id_pairs,
+    salted_id_pairs,
     salted_pairs,
     surface_nodes,
 )
@@ -70,8 +74,127 @@ def test_salted_equals_naive(spark):
 
 def test_salted_pairs_dedup_across_families(spark):
     df = _surfaces(spark, ["kamora ledger", "kamora ledgex"])
-    pairs = salted_pairs(blocking_keys(df)).collect()
+    keys = blocking_keys(df)
+    pairs = salted_pairs(keys).collect()
     assert len(pairs) == 1  # shares f: and several b: keys, but one row out
+    by_surface = {}
+    for r in keys.collect():
+        by_surface.setdefault(r.norm_surface, set()).add(r.block_key)
+    shared = by_surface["kamora ledger"] & by_surface["kamora ledgex"]
+    assert len(shared) > 1
+    # the surviving row carries the SMALLEST shared key (pair checksums
+    # of the ER queries depend on it)
+    assert pairs[0].block_key == min(shared)
+
+
+# salt-cell regimes, (max_cell, max_salts), for the hottest key of each
+# case below: one cell, several cells, salt count capped at max_salts
+SALT_REGIMES = {"one_cell": (1024, 64), "several_cells": (8, 64), "cap_hit": (8, 4)}
+
+
+def _assert_regime(regime, n_hot, max_cell, max_salts):
+    want = math.ceil(n_hot / max_cell)
+    assert {"one_cell": want == 1, "several_cells": 1 < want <= max_salts,
+            "cap_hit": want > max_salts}[regime]
+
+
+def _self_default(spark, max_cell, max_salts):
+    """Default mode: one row per unordered pair, carried columns swapped
+    with the ids, block_key = smallest shared key.  Ids 0..299 share
+    "hot"; 200..369 also sit in 7 cold keys, so many pairs share several
+    keys.  The ER delegate salted_pairs must return the same rows."""
+    rows = [(i, "hot") for i in range(300)] + [
+        (200 + i, f"cold{i % 7}") for i in range(170)
+    ]
+    blocks = spark.createDataFrame(rows, "surface_id long, block_key string").withColumn(
+        "norm_surface", F.concat(F.lit("s"), F.col("surface_id").cast("string"))
+    )
+    got = salted_id_pairs(
+        blocks, "surface_id", max_cell=max_cell, max_salts=max_salts,
+        carry=("norm_surface",),
+    ).collect()
+    delegate = salted_pairs(blocks, max_cell, max_salts).collect()
+    assert sorted(map(tuple, delegate)) == sorted(map(tuple, got))
+    keys = {}
+    for i, k in rows:
+        keys.setdefault(i, set()).add(k)
+    by_key = {}
+    for i, k in rows:
+        by_key.setdefault(k, []).append(i)
+    want = {
+        (a, b, f"s{a}", f"s{b}", min(keys[a] & keys[b]))
+        for members in by_key.values()
+        for a, b in combinations(sorted(members), 2)
+    }
+    return 300, [tuple(r) for r in got], want
+
+
+def _self_emit_once(spark, max_cell, max_salts):
+    """Emit-once mode on a composite (slot, bandh) key: every pair sharing
+    any bucket exactly once, from its first shared slot.  Slot 1 is one
+    hot bucket for ids < 250; ids >= 250 only meet on slots 0 and 2."""
+    def bv(i):
+        return (i % 2, 0 if i < 250 else 1000 + i, i % 3)
+
+    rows = [(i, s, v, *bv(i)) for i in range(300) for s, v in enumerate(bv(i))]
+    blocks = spark.createDataFrame(
+        rows, "id long, slot int, bandh long, bv0 long, bv1 long, bv2 long"
+    )
+    first = F.lit(-1)
+    for j in reversed(range(3)):
+        first = F.when(F.col(f"a_bv{j}") == F.col(f"b_bv{j}"), F.lit(j)).otherwise(first)
+    got = salted_id_pairs(
+        blocks, "id", key_col=("slot", "bandh"), max_cell=max_cell,
+        max_salts=max_salts, carry=("bv0", "bv1", "bv2"), first_shared_key=first,
+    ).collect()
+    want = {
+        (a, b, *bv(a), *bv(b))
+        for a, b in combinations(range(300), 2)
+        if any(x == y for x, y in zip(bv(a), bv(b)))
+    }
+    return 250, [tuple(r) for r in got], want
+
+
+def _bipartite(spark, max_cell, max_salts):
+    """One hot band shared by 200 corpus rows and 20 queries, plus a cold
+    band (cold3) and a band absent from the corpus (coldX)."""
+    right = spark.createDataFrame(
+        [(i, "hot") for i in range(200)] + [(i, f"cold{i % 7}") for i in range(200, 260)],
+        "nbr_id long, band string",
+    )
+    left = spark.createDataFrame(
+        [(i, "hot") for i in range(20)] + [(201, "cold3"), (202, "coldX")],
+        "q_id long, band string",
+    )
+    got = salted_bipartite_id_pairs(
+        left, right, "q_id", "nbr_id", max_cell=max_cell, max_salts=max_salts
+    ).collect()
+    corpus = [(r.nbr_id, r.band) for r in right.collect()]
+    want = {
+        (ql, nr)
+        for ql, qb in [(r.q_id, r.band) for r in left.collect()]
+        for nr, nb in corpus
+        if qb == nb
+    }
+    n_cold3 = sum(1 for i in range(200, 260) if i % 7 == 3)
+    assert len(want) == 20 * 200 + n_cold3  # hot block + cold3
+    assert all(q != 202 for q, _ in want)  # coldX matches nothing
+    return 200, [tuple(r) for r in got], want
+
+
+@pytest.mark.parametrize("regime", list(SALT_REGIMES))
+@pytest.mark.parametrize(
+    "shape", [_self_default, _self_emit_once, _bipartite],
+    ids=["self_default", "self_emit_once", "bipartite"],
+)
+def test_salted_join_equals_naive(spark, shape, regime):
+    """Every salted join shape == its naive Python oracle in every salt
+    regime, row for row: no pair lost, none emitted twice."""
+    max_cell, max_salts = SALT_REGIMES[regime]
+    n_hot, got, want = shape(spark, max_cell, max_salts)
+    _assert_regime(regime, n_hot, max_cell, max_salts)
+    assert len(got) == len(set(got))
+    assert set(got) == want
 
 
 def test_surface_nodes_counts(spark):
@@ -88,12 +211,8 @@ def test_surface_nodes_counts(spark):
 def test_salted_id_pairs_equals_naive(spark):
     """Payload-free salted self-join == naive all-pairs, including an
     oversized hot block that spans multiple salt cells."""
-    import itertools
-
-    from spel_spark.operators.blocking import salted_id_pairs
-
     rows = [(i, "hot") for i in range(300)] + [
-        (1000 + i, f"cold{i % 7}" ) for i in range(70)
+        (1000 + i, f"cold{i % 7}") for i in range(70)
     ]
     df = spark.createDataFrame(rows, "id long, block_key string")
     got = {
@@ -105,7 +224,7 @@ def test_salted_id_pairs_equals_naive(spark):
     for i, k in rows:
         by_key.setdefault(k, []).append(i)
     for members in by_key.values():
-        for a, b in itertools.combinations(sorted(members), 2):
+        for a, b in combinations(sorted(members), 2):
             want.add((a, b))
     assert got == want
 
