@@ -48,7 +48,11 @@ def _cmd_run(args: argparse.Namespace) -> int:
 
 def _cmd_incremental(args: argparse.Namespace) -> int:
     from spel_spark.session import get_spark
-    from spel_spark.streaming.incremental import read_clusters, start_incremental_er
+    from spel_spark.streaming.incremental import (
+        NoClusterState,
+        read_clusters,
+        start_incremental_er,
+    )
 
     spark = get_spark(app_name="spel_spark_incremental")
     redirects = spark.read.parquet(args.redirects) if args.redirects else None
@@ -63,10 +67,10 @@ def _cmd_incremental(args: argparse.Namespace) -> int:
     q.awaitTermination()
     try:
         clusters = read_clusters(spark, args.state)
-    except ValueError:
+    except NoClusterState:
         # zero batches drained AND no committed state (virgin dir, or
         # only an uncommitted begin-record from a crashed first epoch):
-        # report cleanly instead of a trace
+        # report cleanly instead of a trace.  A corrupt state dir raises.
         print(f"no data processed; no cluster state at {args.state}/clusters")
         return 0
     n = clusters.count()

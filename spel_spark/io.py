@@ -1,18 +1,27 @@
-"""Checkpoint + lineage storage layer: the one commit protocol.
+"""Checkpoint + lineage storage layer: the one state store and the one
+commit protocol.
 
 The north rule requires per-stage checkpointing with resume from the last
 committed snapshot (the reference's analogue is its validation-batch
 pickle cache, src/spel/utils.py:116-137, re-read at
-src/spel/model.py:206-208).  The batch store and incremental ER
-(streaming/incremental.py) commit the same way: write the data, then
-atomically swap a ``_LATEST`` JSON manifest.  A commit IS the manifest
-swap, so a crash leaves the previous commit intact plus orphan files no
-manifest names.  Batch layout under ``base_dir``: ``<name>/<fp>/`` holds
-stage ``name`` computed under fingerprint ``fp`` (a hash of its inputs and
-config, see pipeline.py), ``_LATEST`` maps each committed stage to its
-fingerprint — resume reuses a stage only on a match — and ``_lineage/``
-holds the lineage rows.  An Iceberg backend (same semantics: a
-metadata-pointer swap) waits for its runtime jars.
+src/spel/model.py:206-208).  ``CheckpointStore`` holds the state of both
+modes: the batch pipeline's fingerprinted stages and incremental ER's
+(streaming/incremental.py) epoch-partitioned tables.  Both commit the same
+way: write the data, then atomically swap a ``_LATEST`` JSON manifest.  A
+commit IS the manifest swap, so a crash leaves the previous commit intact
+plus orphan files no manifest names.  Layout under ``base_dir``:
+
+  <name>/<fp>/          batch stage ``name`` computed under fingerprint
+                        ``fp`` (a hash of its inputs and config, see
+                        pipeline.py); ``_LATEST`` maps each committed stage
+                        to its fingerprint — resume reuses a stage only on
+                        a match
+  <table>/epoch=<e>/    epoch ``e``'s partition of an incremental table;
+                        that mode's ``_LATEST`` names the live epochs
+  _lineage/             the lineage rows
+
+An Iceberg backend (same semantics: a metadata-pointer swap) waits for its
+runtime jars.
 """
 
 from __future__ import annotations
@@ -114,6 +123,65 @@ class CheckpointStore:
             )
         return self.spark.read.parquet(path)
 
+    # -- epoch-partitioned tables ---------------------------------------
+    def write_epoch(self, df: DataFrame, name: str, epoch: int) -> None:
+        """Write ``df`` as partition ``epoch=<epoch>`` of table ``name``.
+        Dynamic partition overwrite replaces only that partition, so a
+        retried epoch replaces its own rows and nothing else."""
+        path = self._path(name)
+        (
+            df.withColumn("epoch", F.lit(int(epoch)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch")
+            .parquet(path)
+        )
+        # a zero-row epoch writes NO partition dir under dynamic overwrite,
+        # which would make "legitimately empty" indistinguishable from
+        # "partition pruned/deleted behind the manifest's back".  Creating
+        # the (possibly empty) partition dir pins the invariant read_epochs
+        # relies on: a listed partition that is MISSING is always
+        # corruption (on an object store: a zero-byte marker object).
+        os.makedirs(self._path(name, f"epoch={int(epoch)}"), exist_ok=True)
+
+    def _table(self, name: str, ddl: str) -> DataFrame:
+        # explicit schema: a zero-row epoch leaves a file-less partition
+        # that inference cannot read.  A missing table raises here
+        return self.spark.read.schema(f"{ddl}, epoch int").parquet(self._path(name))
+
+    def read_epochs(self, name: str, ddl: str, epochs: list[int]) -> DataFrame:
+        """The rows of ``epochs`` in table ``name`` (schema ``ddl`` plus
+        the ``epoch int`` column): a partition-pruned scan, no job at plan
+        time.  A listed partition that is missing raises — someone pruned
+        state a manifest still references, and reading it as empty would
+        silently drop its rows."""
+        for e in epochs:
+            if not os.path.isdir(self._path(name, f"epoch={e}")):
+                raise ValueError(
+                    f"state manifest references epoch {e} of "
+                    f"{self._path(name)!r} but that partition is missing — "
+                    "state dir corrupted or partially deleted"
+                )
+        return self._table(name, ddl).filter(F.col("epoch").isin(epochs))
+
+    def read_log(self, name: str, ddl: str, before: int) -> DataFrame:
+        """Every row of append-only table ``name`` written by an epoch
+        below ``before``.  Excluding the current epoch keeps a retried
+        epoch deterministic: its own partial partition is never an input."""
+        return self._table(name, ddl).filter(F.col("epoch") < int(before))
+
+    def prune_epochs(self, name: str, keep: set[int]) -> None:
+        """Delete the partitions of table ``name`` whose epoch is not in
+        ``keep`` (retention; on an object store/Iceberg this is snapshot
+        expiry).  Run it AFTER the manifest swap: a crash mid-prune then
+        leaves only orphans no manifest references, which the next
+        commit's prune removes."""
+        path = self._path(name)
+        for entry in os.listdir(path):
+            head, _, ep = entry.partition("=")
+            if head == "epoch" and ep.isdigit() and int(ep) not in keep:
+                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
+
     # -- lineage ---------------------------------------------------------
     N_HIST_BUCKETS = 10
 
@@ -155,7 +223,7 @@ class CheckpointStore:
             .withColumn("stage", F.lit(stage))
             .withColumn("backend", F.lit("parquet"))
             .withColumn("wall_ts", F.lit(float(time.time())))
-            .withColumn("extra", F.lit(str(extra or {})))
+            .withColumn("extra", F.lit(json.dumps(extra or {})))
             .select(
                 "stage", "partition_id", "rows", "score_histogram",
                 "backend", "wall_ts", "extra",

@@ -23,16 +23,18 @@ ONCE in batch, then each arriving micro-batch only pays for what it adds —
   surfaces whose cluster id actually changed are re-assigned and emitted
   as a clusters DELTA partition.  The full assignment is the
   latest-epoch-wins resolution over delta partitions; every
-  ``compact_every`` epochs the resolution is materialized as a single
-  full-snapshot partition and the superseded deltas are pruned, so reads
-  stay O(1 snapshot + few deltas) instead of O(epochs);
+  ``compact_every`` epochs the resolution is written as that epoch's
+  partition through the same epoch write (a full snapshot) and the
+  superseded deltas are pruned, so reads stay O(1 snapshot + few deltas)
+  instead of O(epochs);
 * the mention instance table is touched append-only.
 
-State layout under ``state_dir`` (all parquet; every write lands in an
-``epoch=<id>`` partition with dynamic partition overwrite — a RETRIED
-epoch replaces its own partition and reads only what the ``_LATEST``
-manifest references, so foreachBatch's at-least-once becomes
-effectively-once, same discipline as ingest.start_mention_ingest):
+State layout under ``state_dir``: epoch-partitioned parquet tables of the
+io.CheckpointStore, ``<table>/epoch=<id>/``.  Every write replaces only its
+own epoch's partition (dynamic partition overwrite), and a merge reads only
+the partitions the ``_LATEST`` manifest references, so a RETRIED epoch
+replays foreachBatch's at-least-once delivery as effectively-once, the
+same discipline as ingest.start_mention_ingest:
 
   mentions/       append    per-mention rows of each batch
   blocks/         append    block keys of surfaces FIRST SEEN in the epoch
@@ -41,18 +43,17 @@ effectively-once, same discipline as ingest.start_mention_ingest):
   components/     snapshot  (node, component) — star edges of the next epoch
   surf_clusters/  snapshot  (norm_surface -> cluster_id) — the diff basis
   clusters/       delta     changed/new mention->cluster rows per epoch
-  _lineage/       per-epoch per-partition lineage rows (epoch-partitioned
-                  dynamic overwrite — a retried epoch replaces its own
-                  audit rows, keeping the log effectively-once too)
-  _LATEST         manifest  JSON commit record (written by io._write_marker)
+  _lineage/       per-epoch per-partition lineage rows (a retried epoch
+                  replaces its own audit rows: the log is effectively-once)
+  _LATEST         manifest  JSON commit record (io's commit protocol)
 
 The ``_LATEST`` manifest is the commit point and the O(1) answer to
 "what is the current state" — the moral equivalent of an Iceberg
-metadata-pointer swap, and the same commit protocol the batch
-CheckpointStore uses.  It records which snapshot epoch and which
-clusters partitions are live, plus the same for the PREVIOUS commit so a
-retried epoch replays against exactly the inputs its first attempt saw
-even after retention has pruned everything older.  Fields:
+metadata-pointer swap, and the same commit protocol the batch stages use.
+It records which snapshot epoch and which clusters partitions are live,
+plus the same for the PREVIOUS commit so a retried epoch replays against
+exactly the inputs its first attempt saw even after retention has pruned
+everything older.  Fields:
 
   epoch               id of the epoch this manifest belongs to
   committed           False between merge start and commit (a reader
@@ -75,7 +76,6 @@ the same commit semantics without the catalog dependency.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,103 +92,6 @@ from spel_spark.operators.clustering import (
     surface_clusters,
 )
 from spel_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs, threshold_edges
-
-
-def _path(state_dir: str, name: str) -> str:
-    return f"{state_dir}/{name}"
-
-
-def _write_epoch(df: DataFrame, path: str, epoch: int) -> None:
-    (
-        df.withColumn("epoch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(path)
-    )
-    # a zero-row epoch writes NO partition dir under dynamic overwrite,
-    # which would make "legitimately empty" indistinguishable from
-    # "partition pruned/deleted behind the manifest's back".  Creating the
-    # (possibly empty) partition dir pins the invariant the read guards
-    # rely on: a manifest-referenced partition that is MISSING is always
-    # corruption (local-FS form, like _prune_epochs; on an object store
-    # this is a zero-byte marker object).
-    os.makedirs(os.path.join(path, f"epoch={int(epoch)}"), exist_ok=True)
-
-
-def _with_epoch(schema) -> "object":
-    from pyspark.sql.types import IntegerType, StructType
-
-    full = StructType(list(schema.fields))
-    return full.add("epoch", IntegerType())
-
-
-def _read_state(spark: SparkSession, path: str, schema) -> DataFrame | None:
-    """Read a state table with its EXPLICIT schema (+ the epoch partition
-    column).  Explicit schemas matter twice: an epoch that produced zero
-    rows leaves a file-less partition dir that schema inference cannot
-    read, and inference would make 'empty' indistinguishable from
-    'broken'.
-
-    ONLY the path-missing case maps to None: any other failure (transient
-    IO, corrupt footer — these surface at action time under an explicit
-    schema) must FAIL the batch so the streaming checkpoint retries it —
-    treating it as empty state would silently drop every new-vs-old pair
-    of this epoch, and since a pair is only generated at the epoch its
-    later member first arrives, the edges would be missing forever
-    after."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(_with_epoch(schema)).parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
-
-
-def _read_prev(
-    spark: SparkSession, path: str, epoch: int, schema
-) -> DataFrame | None:
-    """All rows committed by epochs < ``epoch`` (None when the table does
-    not exist yet).  Excluding the current epoch makes a retried epoch
-    deterministic: its own partial partition is never an input."""
-    df = _read_state(spark, path, schema)
-    return None if df is None else df.filter(F.col("epoch") < epoch)
-
-
-def _read_snapshot(
-    spark: SparkSession, path: str, epoch: int | None, schema
-) -> DataFrame | None:
-    """The snapshot partition of exactly ``epoch`` — an O(1)
-    partition-pruned scan driven by the manifest, never an agg(max) over
-    all epochs.  Returns None only when the manifest says there is no
-    previous epoch; a manifest-referenced partition that is MISSING
-    raises (someone pruned state the manifest still references —
-    proceeding as 'empty' would silently drop every previously known
-    surface/component)."""
-    if epoch is None:
-        return None
-    df = _read_state(spark, path, schema)
-    if df is None:
-        raise ValueError(
-            f"state manifest references epoch {epoch} of {path!r} but the "
-            "table does not exist — state dir corrupted or partially deleted"
-        )
-    # the table dir existing is not enough: a pruned/deleted epoch=<N>
-    # partition under a surviving dir would otherwise filter to an EMPTY
-    # frame and silently drop every previously known surface/component —
-    # exactly the corruption mode this guard documents
-    _assert_epoch_partition(path, int(epoch))
-    return df.filter(F.col("epoch") == int(epoch)).drop("epoch")
-
-
-def _assert_epoch_partition(path: str, epoch: int) -> None:
-    if not os.path.isdir(os.path.join(path, f"epoch={int(epoch)}")):
-        raise ValueError(
-            f"state manifest references epoch {epoch} of {path!r} but that "
-            "partition is missing — state dir corrupted or partially deleted"
-        )
 
 
 def _epoch_inputs(marker: dict | None, state_dir: str, epoch: int) -> tuple:
@@ -246,26 +149,6 @@ def _epoch_inputs(marker: dict | None, state_dir: str, epoch: int) -> tuple:
     return marker["epoch"], list(marker.get("cluster_epochs", []))
 
 
-def _prune_epochs(path: str, keep: set[int]) -> None:
-    """Delete epoch partitions not referenced by the manifest (retention).
-    Local-filesystem implementation (the sandbox case); on an object
-    store/Iceberg this is snapshot expiry.  Pruning runs AFTER the commit
-    manifest swap, so a crash mid-prune leaves only orphan partitions
-    that no manifest references — readers partition-prune past them and
-    the next commit's pass removes them."""
-    if not os.path.isdir(path):
-        return
-    for entry in os.listdir(path):
-        if not entry.startswith("epoch="):
-            continue
-        try:
-            ep = int(entry.split("=", 1)[1])
-        except ValueError:
-            continue
-        if ep not in keep:
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-
-
 # fixed state-table schemas (epoch partition column added at read time)
 SURFACES_SCHEMA = "norm_surface string, n_mentions bigint, min_mention_id bigint"
 BLOCKS_SCHEMA = "surface_id bigint, norm_surface string, block_key string"
@@ -282,37 +165,23 @@ _CLUSTER_PAYLOAD = [
 ]
 
 
-def _st(ddl: str):
-    from pyspark.sql.types import StructType
-
-    return StructType.fromDDL(ddl)
-
-
-def _resolve_clusters(
-    spark: SparkSession, state_dir: str, epochs: list[int]
-) -> DataFrame:
-    """Latest-epoch-wins resolution of the clusters delta partitions.
-
-    A mention's row is re-emitted only at epochs where its cluster id
-    changed, so the max-epoch row per mention_id IS the current
-    assignment.  Single-partition fast path (the post-compaction common
-    case): a straight scan, zero shuffles."""
-    df = _read_state(spark, _path(state_dir, "clusters"), _st(CLUSTERS_SCHEMA))
-    if df is None:
-        raise ValueError(f"no clusters state under {state_dir!r}")
-    # same missing-partition guard as _read_snapshot: a manifest-referenced
-    # delta partition that was pruned must raise, not resolve to a view
-    # that silently lost those mentions' assignments
-    for e in epochs:
-        _assert_epoch_partition(_path(state_dir, "clusters"), int(e))
-    df = df.filter(F.col("epoch").isin([int(e) for e in epochs]))
-    if len(epochs) == 1:
-        return df.drop("epoch")
+def _latest(clusters: DataFrame) -> DataFrame:
+    """Latest-epoch-wins resolution of clusters rows.  A mention's row is
+    re-emitted only at epochs where its cluster id changed, so the
+    max-epoch row per mention_id IS the current assignment."""
     return (
-        df.groupBy("mention_id")
+        clusters.groupBy("mention_id")
         .agg(F.max_by(F.struct(*_CLUSTER_PAYLOAD), F.col("epoch")).alias("_s"))
         .select("mention_id", "_s.*")
     )
+
+
+def _resolve_clusters(store: CheckpointStore, epochs: list[int]) -> DataFrame:
+    """The assignment the clusters partitions ``epochs`` compose.
+    Single-partition fast path (the post-compaction common case): a
+    straight scan, zero shuffles."""
+    df = store.read_epochs("clusters", CLUSTERS_SCHEMA, epochs)
+    return df.drop("epoch") if len(epochs) == 1 else _latest(df)
 
 
 def merge_batch(
@@ -365,19 +234,20 @@ def merge_batch(
             "prev_cluster_epochs": list(prev_cluster_epochs),
         },
     )
+    # The manifest decides what exists: there is no prior state exactly
+    # when prev_epoch is None.  Otherwise a missing table or partition is
+    # corruption and the reads below raise: as empty state it would drop
+    # this epoch's new-vs-old pairs, which no later epoch generates.
     store = CheckpointStore(spark, state_dir)
 
     m = batch_mentions.persist()
-    _write_epoch(m, _path(state_dir, "mentions"), epoch)
+    store.write_epoch(m, "mentions", epoch)
 
     batch_surf = surface_nodes(m)
-    prev_surf = _read_snapshot(
-        spark, _path(state_dir, "surfaces"), prev_epoch, _st(SURFACES_SCHEMA)
-    )
-    if prev_surf is None:
-        merged_surf = batch_surf
-        new_surf = batch_surf
+    if prev_epoch is None:
+        merged_surf = new_surf = batch_surf
     else:
+        prev_surf = store.read_epochs("surfaces", SURFACES_SCHEMA, [prev_epoch])
         cols = ["norm_surface", "n_mentions", "min_mention_id"]
         merged_surf = (
             prev_surf.select(*cols)
@@ -393,9 +263,9 @@ def merge_batch(
             prev_surf.select("norm_surface"), "norm_surface", "left_anti"
         )
     merged_surf = merged_surf.persist()
-    _write_epoch(
+    store.write_epoch(
         merged_surf.select("norm_surface", "n_mentions", "min_mention_id"),
-        _path(state_dir, "surfaces"),
+        "surfaces",
         epoch,
     )
 
@@ -406,14 +276,13 @@ def merge_batch(
     new_blocks = blocking_keys(new_surf).select(
         "surface_id", "norm_surface", "block_key"
     ).persist()
-    _write_epoch(new_blocks, _path(state_dir, "blocks"), epoch)
-    prev_blocks = _read_prev(
-        spark, _path(state_dir, "blocks"), epoch, _st(BLOCKS_SCHEMA)
-    )
+    store.write_epoch(new_blocks, "blocks", epoch)
     all_blocks = new_blocks.select("surface_id", "block_key")
-    if prev_blocks is not None:
+    if prev_epoch is not None:
         all_blocks = all_blocks.unionByName(
-            prev_blocks.select("surface_id", "block_key")
+            store.read_log("blocks", BLOCKS_SCHEMA, epoch).select(
+                "surface_id", "block_key"
+            )
         )
     cand = (
         salted_bipartite_id_pairs(
@@ -441,49 +310,36 @@ def merge_batch(
     new_edges = threshold_edges(score_pairs(pairs), threshold).select(
         "a_id", "b_id", "score"
     )
-    _write_epoch(new_edges, _path(state_dir, "edges"), epoch)
+    store.write_epoch(new_edges, "edges", epoch)
     # read the committed bytes back: scoring (the Jaro-Winkler pandas UDF
     # over every salted candidate pair — the flow's most expensive stage)
     # must run ONCE per epoch, not re-execute for CC's backend-selection
     # count and again for the edge collect
-    new_edges = (
-        _read_state(spark, _path(state_dir, "edges"), _st(EDGES_SCHEMA))
-        .filter(F.col("epoch") == epoch)
-        .drop("epoch")
-    )
+    new_edges = store.read_epochs("edges", EDGES_SCHEMA, [epoch]).drop("epoch")
 
     # CC delta rounds: previous components re-enter as star edges
-    prev_comp = _read_snapshot(
-        spark, _path(state_dir, "components"), prev_epoch, _st(COMPONENTS_SCHEMA)
-    )
     cc_in = new_edges.select("a_id", "b_id")
-    if prev_comp is not None:
+    if prev_epoch is not None:
         cc_in = cc_in.unionByName(
-            prev_comp.select(
+            store.read_epochs("components", COMPONENTS_SCHEMA, [prev_epoch]).select(
                 F.col("node").alias("a_id"), F.col("component").alias("b_id")
             )
         )
     comps = connected_components(cc_in)
-    _write_epoch(comps, _path(state_dir, "components"), epoch)
+    store.write_epoch(comps, "components", epoch)
 
     # O(delta) assignment: diff this epoch's surface->cluster mapping
     # (tiny) against the previous epoch's, and touch prior mentions ONLY
     # for surfaces whose cluster id changed
-    sc_new = surface_clusters(merged_surf, comps)
-    _write_epoch(sc_new, _path(state_dir, "surf_clusters"), epoch)
-    sc_new = (  # committed bytes: the diff + assigns must not re-run CC joins
-        _read_state(
-            spark, _path(state_dir, "surf_clusters"), _st(SURF_CLUSTERS_SCHEMA)
-        )
-        .filter(F.col("epoch") == epoch)
-        .drop("epoch")
-    )
+    store.write_epoch(surface_clusters(merged_surf, comps), "surf_clusters", epoch)
+    # committed bytes: the diff + assigns must not re-run CC joins
+    sc_new = store.read_epochs(
+        "surf_clusters", SURF_CLUSTERS_SCHEMA, [epoch]
+    ).drop("epoch")
     delta = assign_mentions(m, sc_new)
     changed = None
-    prev_sc = _read_snapshot(
-        spark, _path(state_dir, "surf_clusters"), prev_epoch, _st(SURF_CLUSTERS_SCHEMA)
-    )
-    if prev_sc is not None:
+    if prev_epoch is not None:
+        prev_sc = store.read_epochs("surf_clusters", SURF_CLUSTERS_SCHEMA, [prev_epoch])
         changed = (
             sc_new.join(
                 prev_sc.withColumnRenamed("cluster_id", "prev_cluster_id"),
@@ -497,21 +353,15 @@ def merge_batch(
         # skip the prior-mention scan entirely (isEmpty is a limit(1) job
         # on the tiny diff, not a full count)
         if not changed.isEmpty():
-            prev_m = _read_prev(
-                spark, _path(state_dir, "mentions"), epoch, m.schema
-            )
             reassigned = (
-                prev_m.drop("epoch")
+                store.read_log("mentions", m.schema.toDDL(), epoch)
                 # inner join against the tiny changed-surface set —
                 # broadcast map-side filter over the mention log scan, no
                 # shuffle of the instance table (at 100 TB the mention log
                 # would additionally be bucketed by norm_surface so this
                 # prunes at the file level)
                 .join(changed, "norm_surface")
-                .select(
-                    "mention_id", "conv_id", "turn_idx", "begin_char",
-                    "end_char", "surface", "norm_surface", "cluster_id",
-                )
+                .select("mention_id", *_CLUSTER_PAYLOAD)
             )
             delta = delta.unionByName(reassigned)
 
@@ -519,36 +369,20 @@ def merge_batch(
         len(prev_cluster_epochs) + 1 > int(compact_every)
     )
     if compacting:
-        # materialize the full resolved view into this epoch's partition:
-        # prior deltas + this delta, latest epoch wins.  Spark refuses to
-        # overwrite a path it is reading from, so the resolution lands in
-        # a hidden tmp dir (dot-prefixed — invisible to Spark's file
-        # listing) and is renamed into the partition slot (the Iceberg
-        # RewriteDataFiles analogue).  Crash safety: until the manifest
-        # commits, readers resolve the previous view; a retried attempt
-        # rmtree-replaces both tmp and target.
-        base = (
-            _read_state(spark, _path(state_dir, "clusters"), _st(CLUSTERS_SCHEMA))
-            .filter(F.col("epoch").isin([int(e) for e in prev_cluster_epochs]))
+        # materialize the full resolved view as this epoch's partition:
+        # prior deltas + this delta, latest epoch wins (the Iceberg
+        # RewriteDataFiles analogue).  The write reads only the prior
+        # partitions and replaces only this epoch's, so a retried
+        # compaction rewrites it from the same inputs; until the manifest
+        # commits, readers resolve the previous view.
+        delta = _latest(
+            store.read_epochs("clusters", CLUSTERS_SCHEMA, prev_cluster_epochs)
+            .unionByName(delta.withColumn("epoch", F.lit(epoch)))
         )
-        union = base.unionByName(delta.withColumn("epoch", F.lit(epoch)))
-        full = (
-            union.groupBy("mention_id")
-            .agg(F.max_by(F.struct(*_CLUSTER_PAYLOAD), F.col("epoch")).alias("_s"))
-            .select("mention_id", "_s.*")
-        )
-        cl_dir = _path(state_dir, "clusters")
-        tmp = os.path.join(cl_dir, ".compact_tmp")
-        target = os.path.join(cl_dir, f"epoch={epoch}")
-        for p in (tmp, target):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        full.write.parquet(tmp)
-        os.rename(tmp, target)
         cluster_epochs = [epoch]
     else:
-        _write_epoch(delta, _path(state_dir, "clusters"), epoch)
         cluster_epochs = [int(e) for e in prev_cluster_epochs] + [epoch]
+    store.write_epoch(delta, "clusters", epoch)
 
     # per-epoch lineage (north rule: per-partition rows + score
     # histograms) — every input here is committed or persisted, so the
@@ -557,10 +391,7 @@ def merge_batch(
     # own lineage partition instead of appending duplicate audit rows
     # (state commits are effectively-once; the audit log must be too).
     extra = {"epoch": epoch}
-    committed_delta = (
-        _read_state(spark, _path(state_dir, "clusters"), _st(CLUSTERS_SCHEMA))
-        .filter(F.col("epoch") == epoch)
-    )
+    committed_delta = store.read_epochs("clusters", CLUSTERS_SCHEMA, [epoch])
     frames = [
         store.lineage_frame("inc_mentions", m, extra=extra),
         store.lineage_frame("inc_new_blocks", new_blocks, extra=extra),
@@ -574,7 +405,7 @@ def merge_batch(
     lin = frames[0]
     for fr in frames[1:]:
         lin = lin.unionByName(fr)
-    _write_epoch(lin, _path(state_dir, "_lineage"), epoch)
+    store.write_epoch(lin, "_lineage", epoch)
 
     # COMMIT: atomic manifest swap, then retention of everything the
     # current+previous manifests no longer reference (prev inputs stay one
@@ -591,16 +422,19 @@ def merge_batch(
     )
     keep_snap = {epoch} | ({int(prev_epoch)} if prev_epoch is not None else set())
     for tbl in ("surfaces", "components", "surf_clusters"):
-        _prune_epochs(_path(state_dir, tbl), keep_snap)
-    _prune_epochs(
-        _path(state_dir, "clusters"),
-        {int(e) for e in cluster_epochs} | {int(e) for e in prev_cluster_epochs},
-    )
+        store.prune_epochs(tbl, keep_snap)
+    store.prune_epochs("clusters", {*cluster_epochs, *prev_cluster_epochs})
 
     for df in (m, merged_surf, new_blocks, changed):
         if df is not None:
             df.unpersist()
-    return _resolve_clusters(spark, state_dir, cluster_epochs)
+    return _resolve_clusters(store, cluster_epochs)
+
+
+class NoClusterState(ValueError):
+    """``read_clusters`` found nothing committed yet: no ``_LATEST``
+    manifest, or only the begin-record of an uncommitted first epoch.
+    Every other ValueError from it is corruption."""
 
 
 def read_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -610,7 +444,7 @@ def read_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     PREVIOUS consistent view."""
     marker = _read_marker(state_dir)
     if marker is None:
-        raise ValueError(
+        raise NoClusterState(
             f"no {_MARKER} manifest under {state_dir!r} — not an "
             "incremental-ER state dir (or the manifest was deleted)"
         )
@@ -620,8 +454,8 @@ def read_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
         else marker["prev_cluster_epochs"]
     )
     if not epochs:
-        raise ValueError(f"state dir {state_dir!r} has no committed clusters yet")
-    return _resolve_clusters(spark, state_dir, epochs)
+        raise NoClusterState(f"state dir {state_dir!r} has no committed clusters yet")
+    return _resolve_clusters(CheckpointStore(spark, state_dir), epochs)
 
 
 def start_incremental_er(

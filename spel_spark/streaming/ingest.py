@@ -14,10 +14,12 @@ Batch-first engine: this module is optional for the F1 target (SURVEY
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spel_spark.io import CheckpointStore
 from spel_spark.operators.mentions import (
     extract_mentions,
     with_mention_id,
@@ -84,14 +86,10 @@ def start_mention_ingest(
     stream = read_transcript_stream(spark, source_path)
     mentions = streaming_mentions(stream, redirects)
 
+    store = CheckpointStore(spark, os.path.dirname(sink_path))
+
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(sink_path)
-        )
+        store.write_epoch(batch_df, os.path.basename(sink_path), epoch_id)
 
     writer = (
         mentions.writeStream.outputMode("append")

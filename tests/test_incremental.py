@@ -190,6 +190,66 @@ def test_manifestless_state_dir_raises(spark, corpus, tmp_path):
         merge_batch(spark, _mentions(spark, pdf.iloc[100:]), state, epoch=1)
 
 
+def test_missing_partition_raises(spark, corpus, tmp_path):
+    """A partition the manifest references but that was deleted is
+    corruption: the merge and the reader raise instead of serving the
+    state without it."""
+    import shutil
+
+    import pytest
+
+    pdf = corpus.transcripts.head(200)
+    state = str(tmp_path / "state_nosurf")
+    merge_batch(spark, _mentions(spark, pdf.iloc[:100]), state, epoch=0)
+    shutil.rmtree(f"{state}/surfaces/epoch=0")
+    with pytest.raises(ValueError, match="partition is missing"):
+        merge_batch(spark, _mentions(spark, pdf.iloc[100:]), state, epoch=1)
+
+    state = str(tmp_path / "state_nocl")
+    merge_batch(spark, _mentions(spark, pdf.iloc[:100]), state, epoch=0)
+    merge_batch(spark, _mentions(spark, pdf.iloc[100:]), state, epoch=1)
+    assert _read_marker(state)["cluster_epochs"] == [0, 1]
+    shutil.rmtree(f"{state}/clusters/epoch=0")
+    with pytest.raises(ValueError, match="partition is missing"):
+        read_clusters(spark, state)
+
+
+def test_cli_reports_only_missing_state_as_no_data(
+    spark, corpus, tmp_path, monkeypatch, capsys
+):
+    """``spel_spark incremental`` with nothing to drain: a virgin state dir
+    prints "no data processed" and exits 0; a corrupt manifest or a
+    deleted clusters partition raises (a non-zero exit)."""
+    import shutil
+
+    import pytest
+
+    from spel_spark import cli
+
+    monkeypatch.setattr("spel_spark.session.get_spark", lambda **kw: spark)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+
+    def run(state):
+        return cli.main(["incremental", "--input", src, "--state", state])
+
+    assert run(str(tmp_path / "virgin")) == 0
+    assert "no data processed" in capsys.readouterr().out
+
+    corrupt = str(tmp_path / "corrupt")
+    os.makedirs(corrupt)
+    with open(os.path.join(corrupt, "_LATEST"), "w") as f:
+        f.write("{not json")
+    with pytest.raises(ValueError, match="corrupt _LATEST"):
+        run(corrupt)
+
+    lost = str(tmp_path / "lost")
+    merge_batch(spark, _mentions(spark, corpus.transcripts.head(100)), lost, epoch=0)
+    shutil.rmtree(f"{lost}/clusters/epoch=0")
+    with pytest.raises(ValueError, match="partition is missing"):
+        run(lost)
+
+
 def test_retention_bounds_state_and_compaction_preserves_equality(
     spark, corpus, tmp_path
 ):
@@ -206,6 +266,17 @@ def test_retention_bounds_state_and_compaction_preserves_equality(
         final = merge_batch(
             spark, _mentions(spark, chunk), state, epoch=e, compact_every=3
         )
+        if e == 3:
+            # epoch 3 compacts: its retry rewrites the full-snapshot
+            # partition from the same inputs, to the same view
+            first = (_cluster_map(final), _read_marker(state))
+            final = merge_batch(
+                spark, _mentions(spark, chunk), state, epoch=e, compact_every=3
+            )
+            assert (_cluster_map(final), _read_marker(state)) == first
+            assert first[1]["cluster_epochs"] == [3]
+    # compaction leaves no tmp or staging dirs behind
+    assert all(d.startswith("epoch=") for d in os.listdir(f"{state}/clusters"))
     for tbl in ("surfaces", "components", "surf_clusters"):
         assert _epoch_dirs(f"{state}/{tbl}") == [4, 5], tbl
     # compact_every=3 -> full snapshots at epochs 3 (deltas 0-2 + 3) then
@@ -287,7 +358,7 @@ def test_incremental_lineage_rows(spark, corpus, tmp_path):
     merge_batch(spark, _mentions(spark, pdf.iloc[200:]), state, epoch=1)
     lin = spark.read.parquet(f"{state}/_lineage")
     rows = lin.collect()
-    stages = {(r.stage, json.loads(r.extra.replace("'", '"'))["epoch"]) for r in rows}
+    stages = {(r.stage, json.loads(r.extra)["epoch"]) for r in rows}
     for e in (0, 1):
         for st in ("inc_mentions", "inc_new_blocks", "inc_edges", "inc_clusters_delta"):
             assert (st, e) in stages, (st, e)
