@@ -2,7 +2,7 @@
 
 Default mode (driver contract): runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``get_spark``'s host-sized local session and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``--scaling`` mode (north-rule evidence): runs the full ER pipeline on an
@@ -25,13 +25,11 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # scaling corpus: seeded 400k-turn base, replicated in Spark (distinct
 # conv_ids) to this size so parallel work dominates fixed costs
 SCALING_TURNS = int(os.environ.get("SPEL_BENCH_TURNS", "8000000"))
 BASE_TURNS = 400000
 CACHE_DIR = os.environ.get("SPEL_BENCH_CACHE", "/tmp/spel_bench_cache")
-os.environ.setdefault("SPEL_DRIVER_MEM", "48g")
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,9 +45,7 @@ def run_headline() -> None:
     import spel_spark.queries as Q
     from spel_spark.operators.dedup import cluster_documents, simhash64, simhash_candidate_pairs
 
-    spark = get_spark(
-        app_name="spel_bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS
-    )
+    spark = get_spark(app_name="spel_bench")
     sf = float(SF_DIR.rstrip("/").split("sf")[-1]) if "sf" in SF_DIR else -1.0
 
     # The headline times the ENGINE paths (anchor/salted pair generation,
@@ -166,7 +162,8 @@ def _er_prepare(spark, n_turns: int) -> str:
     from spel_spark.pipeline import load_transcripts_df
 
     corpus = generate(seed=42, n_turns=n_turns)
-    load_transcripts_df(spark, corpus).repartition(CPUS).write.mode(
+    cores = spark.sparkContext.defaultParallelism
+    load_transcripts_df(spark, corpus).repartition(cores).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "transcripts"))
     spark.createDataFrame(corpus.redirects).write.mode("overwrite").parquet(
@@ -200,8 +197,7 @@ def _prepare_scaling_cache(n_turns: int) -> str:
     from spel_spark.pipeline import load_transcripts_df
     from spel_spark.session import get_spark
 
-    spark = get_spark(app_name="spel_bench_prep", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
+    spark = get_spark(app_name="spel_bench_prep")
     corpus = generate(seed=42, n_turns=min(n_turns, BASE_TURNS))
     base = load_transcripts_df(spark, corpus)
     replicas = max(1, n_turns // BASE_TURNS)
@@ -309,10 +305,7 @@ def _run_scaling_level(path: str, threads: int, n_turns: int, mode: str = "fused
         cmd = ["taskset", "-c", f"0-{threads - 1}"] + cmd
     pre = _steal_probe()
     start_ts = time.strftime("%Y-%m-%dT%H:%M:%S")
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, check=True,
-        env={**os.environ, "SPEL_DRIVER_MEM": os.environ.get("SPEL_DRIVER_MEM", "24g")},
-    )
+    out = subprocess.run(cmd, capture_output=True, text=True, check=True)
     res = json.loads(out.stdout.strip().splitlines()[-1])
     res.update({
         "start_ts": start_ts,
@@ -326,18 +319,7 @@ def _run_level_main(threads: int, path: str, n_turns: int, mode: str = "fused") 
     from spel_spark.pipeline import run_pipeline
     from spel_spark.session import get_spark, warm_python_workers
 
-    # GC threads sized to the pinned core count: with the default (ncpu-
-    # derived) settings a pinned JVM runs 32 GC threads on 2 cores and
-    # thrashes, adding minutes of CPU-time variance between identical runs
-    gc_opts = (
-        f"-XX:+UseG1GC -XX:ParallelGCThreads={max(2, threads)} "
-        f"-XX:ConcGCThreads={max(1, threads // 2)}"
-    )
-    spark = get_spark(
-        app_name=f"spel_scaling_{threads}", master=f"local[{threads}]",
-        shuffle_partitions=threads * 2,
-        extra_conf={"spark.driver.extraJavaOptions": gc_opts},
-    )
+    spark = get_spark(app_name=f"spel_scaling_{threads}", master=f"local[{threads}]")
     transcripts = spark.read.parquet(os.path.join(path, "transcripts"))
     redirects = spark.read.parquet(os.path.join(path, "redirects"))
     transcripts.count()  # warm metadata + page cache
@@ -765,9 +747,7 @@ def run_incremental() -> None:
     from spel_spark.streaming.incremental import merge_batch
 
     path = _prepare_scaling_cache(INCREMENTAL_TURNS)
-    spark = get_spark(
-        app_name="spel_inc_bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS
-    )
+    spark = get_spark(app_name="spel_inc_bench")
     t = spark.read.parquet(os.path.join(path, "transcripts"))
     # deterministic disjoint slices: ~89% bootstrap, ~10% delta, ~1% delta
     slot = F.pmod(F.xxhash64("conv_id"), F.lit(100))
@@ -885,8 +865,7 @@ def run_cc_scale() -> None:
 
     n_nodes = int(os.environ.get("SPEL_CC_NODES", "6100000"))
     chain = 64
-    spark = get_spark(app_name="spel_cc_scale", master="local[8]",
-                      shuffle_partitions=16)
+    spark = get_spark(app_name="spel_cc_scale", master="local[8]")
     nodes = spark.range(n_nodes).select(F.col("id"))
     # exclude chain tails AND the final node: id n_nodes-1 must not emit an
     # edge to the out-of-range node n_nodes when n_nodes % chain != 0

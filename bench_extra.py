@@ -17,9 +17,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPEL_EXTRA_REPS", "3"))
-os.environ.setdefault("SPEL_DRIVER_MEM", "48g")
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -31,9 +29,7 @@ def _noop(df):
 def _spark():
     from spel_spark.session import get_spark, warm_python_workers
 
-    spark = get_spark(
-        app_name="spel_bench_extra", master=f"local[{CPUS}]", shuffle_partitions=CPUS
-    )
+    spark = get_spark(app_name="spel_bench_extra")
     warm_python_workers(spark)
     return spark
 

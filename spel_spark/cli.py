@@ -90,6 +90,8 @@ def _cmd_lineage(args: argparse.Namespace) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from spel_spark.operators.scoring import DEFAULT_THRESHOLD
+
     p = argparse.ArgumentParser(prog="spel_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -97,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--input", required=True, help="transcripts parquet path")
     r.add_argument("--output", required=True, help="checkpoint store dir")
     r.add_argument("--redirects", default=None, help="redirects parquet path")
-    r.add_argument("--threshold", type=float, default=0.60)
+    r.add_argument("--threshold", type=float, default=DEFAULT_THRESHOLD)
     r.add_argument("--exact-pairs", action="store_true",
                    help="exact all-pairs blocking (default: anchor-sparsified)")
     r.add_argument("--no-resume", action="store_true",
@@ -112,7 +114,7 @@ def main(argv: list[str] | None = None) -> int:
     inc.add_argument("--checkpoint", default=None,
                      help="streaming checkpoint (default: <state>/_stream_checkpoint)")
     inc.add_argument("--redirects", default=None)
-    inc.add_argument("--threshold", type=float, default=0.60)
+    inc.add_argument("--threshold", type=float, default=DEFAULT_THRESHOLD)
     inc.set_defaults(fn=_cmd_incremental)
 
     li = sub.add_parser("lineage", help="show per-stage lineage rows")

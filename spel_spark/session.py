@@ -1,8 +1,10 @@
-"""SparkSession factory.
+"""SparkSession factory: the one place that decides execution settings.
 
-Single place where execution-relevant config is set so tests, bench and
-spark-submit entrypoints agree.  Designed for a multi-executor cluster
-(AQE on, skew-join on, Arrow on); in this sandbox it runs local[N].
+Plan-quality confs (AQE, skew join, Arrow, shuffled-hash joins) are set
+everywhere; master, heap and shuffle partitions are derived, never passed
+in (see ``get_spark``).  ``SPARK_GRAFT_CPUS`` and ``SPEL_DRIVER_MEM`` are
+deployment settings, read only here, that override the local core count and
+heap.
 """
 
 from __future__ import annotations
@@ -12,8 +14,6 @@ import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def package_zip() -> str:
@@ -41,29 +41,19 @@ def package_zip() -> str:
     return zpath
 
 
-def get_spark(
-    app_name: str = "spel_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "spel_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    same code path serves tests, bench at two parallelism levels, and a real
-    cluster (where ``master`` is supplied by spark-submit and this arg stays
-    None without overriding it).
+    With ``PYSPARK_GATEWAY_PORT`` set, spark-submit already started the JVM,
+    and its ``--master``/``--driver-memory``/``--conf`` hold.  Otherwise the
+    session runs on ``master`` (default ``local[N]``, N from the affinity
+    mask so a ``taskset``-pinned run sizes itself) with one shuffle partition
+    per core and 60% of physical memory as heap.  Local mode runs every
+    executor thread in the driver JVM, so the heap is the cluster's memory:
+    an 8g heap GC-thrashed the array-join queries once a session held state.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPEL_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -83,22 +73,18 @@ def get_spark(
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # local mode runs all 32 executor threads inside the driver JVM, so
-        # this IS the cluster's memory: at 8g the heavy array-join queries
-        # GC-thrash once a session accumulates state (measured: 24 s cold ->
-        # 174 s after a few prior jobs at 8g; flat ~27 s at 32g).  Under
-        # spark-submit on a real cluster the JVM already exists and this
-        # setting is inert — driver memory comes from the submit command.
-        .config("spark.driver.memory", os.environ.get("SPEL_DRIVER_MEM", "32g"))
     )
-    # In local mode .master() applies; under spark-submit on a cluster the
-    # master comes from the submit command and this is a no-op override.
-    if not os.environ.get("SPEL_NO_MASTER_OVERRIDE"):
-        builder = builder.master(master)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    local = "PYSPARK_GATEWAY_PORT" not in os.environ
+    if local:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        mem = os.environ.get("SPEL_DRIVER_MEM") or f"{int(phys * 0.6) >> 20}m"
+        builder = builder.master(master or f"local[{cpus}]")
+        builder = builder.config("spark.driver.memory", mem)
     spark = builder.getOrCreate()
+    if local:
+        parallelism = spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
     spark.sparkContext.setLogLevel("WARN")
     try:
         spark.sparkContext.addPyFile(package_zip())
@@ -108,7 +94,7 @@ def get_spark(
     return spark
 
 
-def ensure_min_parallelism(df, target: int | None = None):
+def ensure_min_parallelism(df):
     """Guard against single-split inputs serializing compute-dense operators.
 
     The driver's tables are single parquet files with ONE row group, so a
@@ -122,8 +108,7 @@ def ensure_min_parallelism(df, target: int | None = None):
     no-op, so nothing here is tuned to local mode.  Deterministic under
     retry: keyless repartition keeps Spark's sort-before-repartition.
     """
-    sc = df.sparkSession.sparkContext
-    target = int(target or sc.defaultParallelism)
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
     except Exception:

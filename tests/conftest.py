@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import os
 import shutil
 
 import pytest
@@ -11,16 +10,10 @@ from spel_spark.datagen import generate
 from spel_spark.io import CheckpointStore
 from spel_spark.session import get_spark
 
-# The suite's inputs are small (2k turns, sf0.001/sf0.01), but a lazily
-# collected 32g heap lets the test JVM grow past the RAM of a 15 GB host
-# and get OOM-killed mid-suite.  An explicit SPEL_DRIVER_MEM still wins.
-os.environ.setdefault("SPEL_DRIVER_MEM", "6g")
-
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="spel_tests", master="local[8]", shuffle_partitions=8)
-    yield s
+    yield get_spark(app_name="spel_tests")
 
 
 @pytest.fixture(scope="session")

@@ -29,7 +29,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from spel_spark.session import get_spark
 
-    spark = get_spark(app_name="checksums", shuffle_partitions=32)
+    spark = get_spark(app_name="checksums")
     results: dict[str, dict] = {}
     for name, fn in entry.queries().items():
         if only and name not in only:
