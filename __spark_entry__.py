@@ -34,21 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spel_spark.queries import CATALOG  # noqa: E402
-
-
-def _ship(spark: SparkSession) -> None:
-    """Make spel_spark importable on Python workers (pandas UDFs)."""
-    try:
-        from spel_spark.session import package_zip
-
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass
+from spel_spark.session import ship_package  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    _ship(spark)
+    ship_package(spark)
     from spel_spark.operators.dedup import cluster_documents
 
     return cluster_documents(spark, "/root/testdata/sf0.001")
@@ -139,7 +130,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _ship(spark)
+            ship_package(spark)
             return fn(spark, sf_dir)
 
         return run

@@ -40,21 +40,20 @@ def _materialize(df) -> int:
     return 0
 
 
-def run_headline() -> None:
-    from spel_spark.session import get_spark
+def headline_queries(spark) -> dict:
+    """The headline suite: query name -> thunk building its DataFrame at
+    ``SF_DIR`` (the one registry bench.py and bench_extra.py time).
+
+    The headline times the ENGINE paths (anchor/salted pair generation,
+    bucketed MinHash-LSH dedup) — the plans that survive 100x scale.  The
+    quadratic all-pairs forms (pairs_exact_block, dedup_ngram_jaccard)
+    exist only as sf0.01 DuckDB-parity oracles and are deliberately NOT
+    benched (round-1 verdict: "bench the engine pair-generation path,
+    not the oracle parity queries")."""
     import spel_spark.queries as Q
     from spel_spark.operators.dedup import cluster_documents, simhash64, simhash_candidate_pairs
 
-    spark = get_spark(app_name="spel_bench")
-    sf = float(SF_DIR.rstrip("/").split("sf")[-1]) if "sf" in SF_DIR else -1.0
-
-    # The headline times the ENGINE paths (anchor/salted pair generation,
-    # bucketed MinHash-LSH dedup) — the plans that survive 100x scale.  The
-    # quadratic all-pairs forms (pairs_exact_block, dedup_ngram_jaccard)
-    # exist only as sf0.01 DuckDB-parity oracles and are deliberately NOT
-    # benched (round-1 verdict: "bench the engine pair-generation path,
-    # not the oracle parity queries").
-    headline = {
+    return {
         "tpch_q1": lambda: Q.q_tpch_q1(spark, SF_DIR),
         "pairs_engine": lambda: Q.q_pairs_engine(spark, SF_DIR),
         "pair_scores_engine": lambda: Q.q_pair_scores_engine(spark, SF_DIR),
@@ -70,6 +69,15 @@ def run_headline() -> None:
         "doc_clusters": lambda: cluster_documents(spark, SF_DIR),
         "er_pipeline_20k": lambda: _er_pipeline(spark, 20000),
     }
+
+
+def run_headline() -> None:
+    import spel_spark.queries as Q
+    from spel_spark.session import cache_scope, get_spark
+
+    spark = get_spark(app_name="spel_bench")
+    sf = float(SF_DIR.rstrip("/").split("sf")[-1]) if "sf" in SF_DIR else -1.0
+    headline = headline_queries(spark)
 
     # fixture prep OUTSIDE the timed region: the ER corpus is written to
     # parquet once, and the timed path reads it from storage like a real
@@ -106,11 +114,11 @@ def run_headline() -> None:
             # are shared within one query but must not leak into the next
             # timing (a later query reusing an earlier query's cache ran
             # 2.4x "faster" while the earlier one paid eviction for both)
-            spark.catalog.clearCache()
             pre = _steal_probe(5_000_000)
-            t0 = time.time()
-            _materialize(build())
-            wall = time.time() - t0
+            with cache_scope():
+                t0 = time.time()
+                _materialize(build())
+                wall = time.time() - t0
             runs.append({
                 "wall_sec": round(wall, 3),
                 "probe_pre_ops": round(pre),
@@ -743,7 +751,7 @@ def run_incremental() -> None:
         with_norm_surface,
     )
     from spel_spark.pipeline import PipelineConfig, run_pipeline
-    from spel_spark.session import get_spark, warm_python_workers
+    from spel_spark.session import cache_scope, get_spark, warm_python_workers
     from spel_spark.streaming.incremental import merge_batch
 
     path = _prepare_scaling_cache(INCREMENTAL_TURNS)
@@ -771,7 +779,6 @@ def run_incremental() -> None:
     probes: dict[str, dict] = {}
 
     def timed(label: str, fn):
-        spark.catalog.clearCache()
         pre = _steal_probe(5_000_000)
         t0 = time.time()
         out = fn()
@@ -796,7 +803,7 @@ def run_incremental() -> None:
     n_inc = inc.count()
     w_resolve = time.time() - t0
     chk_inc = checksum(inc)
-    spark.catalog.clearCache()
+
     def run_full():
         df = run_pipeline(
             spark, t, store=None, config=PipelineConfig(exact_pairs=True)
@@ -809,10 +816,12 @@ def run_incremental() -> None:
     # only inflate a wall, so min is the defensible denominator
     full_attempts = []
     for i in range(2):
-        (full, n_full), w = timed(f"full_recompute_{i}", run_full)
+        # checksummed inside the scope whose caches built it
+        with cache_scope():
+            (full, n_full), w = timed(f"full_recompute_{i}", run_full)
+            chk_full = checksum(full)
         full_attempts.append(w)
     w_full = min(full_attempts)
-    chk_full = checksum(full)
     out = {
         "metric": "incremental_delta_vs_full_recompute",
         "n_turns_total": n_total,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spel_spark.functions.similarity import shingles_col
+from spel_spark.session import persist
 
 # MinHash-LSH parameters: 8 bands x 2 rows = 16 hash functions.
 # P(band collision) = 1-(1-j^2)^8 ≈ 0.99 at shingle-jaccard 0.6.
@@ -256,7 +257,7 @@ def salted_pairs(blocks: DataFrame, max_cell: int = 1024, max_salts: int = 64) -
     # consumed by three plan branches (counts + both join sides): persist
     # the narrow projection so the upstream (scan + normalize + banding)
     # is expanded once, not three times (see anchor_pairs for the audit)
-    blocks = blocks.select("surface_id", "norm_surface", "block_key").persist()
+    blocks = persist(blocks.select("surface_id", "norm_surface", "block_key"))
     return salted_id_pairs(
         blocks, "surface_id", max_cell=max_cell, max_salts=max_salts, carry=("norm_surface",)
     ).toDF("a_id", "b_id", "a_norm", "b_norm", "block_key")
@@ -292,9 +293,7 @@ def anchor_pairs(
     # blocks is consumed twice while filling the sized cache below
     # (count aggregation + join probe): persist the narrow projection so
     # the scan + normalize + MinHash banding upstream runs exactly once
-    blocks = blocks.select(
-        "surface_id", "norm_surface", "n_mentions", "block_key"
-    ).persist()
+    blocks = persist(blocks.select("surface_id", "norm_surface", "n_mentions", "block_key"))
     counts = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n_members"))
     # persist: the sized-blocks table is consumed by FIVE plan branches
     # (small -> the triangle join's size count + both of its sides via
@@ -302,12 +301,8 @@ def anchor_pairs(
     # whole upstream — parquet scan + normalize + 16-hash MinHash banding
     # — so one query planned 5 scans of the base table (r6 plan audit:
     # pairs_engine had 68 Exchanges / 5 Scans; with the persist the
-    # upstream runs once).  A derived projection is persisted, never the
-    # caller's DataFrame; lifecycle follows the caller's action (same
-    # contract as dedup.minhash_near_dup_pairs).
-    sized = (
-        blocks.join(counts, "block_key").filter(F.col("n_members") > 1).persist()
-    )
+    # upstream runs once).
+    sized = persist(blocks.join(counts, "block_key").filter(F.col("n_members") > 1))
 
     small = sized.filter(F.col("n_members") <= full_block_limit).select(
         "surface_id", "norm_surface", "n_mentions", "block_key"

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spel_spark.session import cache_scope, persist
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to
@@ -55,6 +57,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
+@cache_scope()
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -81,9 +84,14 @@ def connected_components(
     ``stats``, when passed, records {"backend", "rounds"} for
     observability (bench.py --cc-scale uses it to evidence the
     distributed path's O(log n) round count at >driver_limit scale).
+    ``auto`` caches ``edges`` for its count and the backend's read and
+    releases it on return: both backends return materialized rows.
     """
     if backend == "auto":
-        backend = "driver" if edges.count() <= driver_limit else "distributed"
+        edges = persist(edges)
+        # an exchange-free JVM count fills the cache in its own job; under
+        # AQE a DataFrame count runs the fill as one more job
+        backend = "driver" if edges._jdf.rdd().count() <= driver_limit else "distributed"
     if stats is not None:
         stats["backend"] = backend
     if backend == "driver":

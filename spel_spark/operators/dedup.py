@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spel_spark.operators.clustering import connected_components
+from spel_spark.session import cache_scope, persist
 
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 16 bits each
@@ -129,12 +130,8 @@ def simhash_candidate_pairs(
     from spel_spark.operators.blocking import salted_id_pairs
 
     # consumed once per side of the salted self-join: persist so the
-    # 64-way conditional-sum aggregation behind `sims` runs once.
-    # A derived projection is persisted — NOT the caller's DataFrame —
-    # so the argument is never cached as a side effect; callers running
-    # repeatedly should clearCache between runs (same contract as
-    # minhash_near_dup_pairs below).
-    sims = sims.select(F.col(id_col), F.col("simhash")).persist()
+    # 64-way conditional-sum aggregation behind `sims` runs once
+    sims = persist(sims.select(F.col(id_col), F.col("simhash")))
     bands = sims.select(
         F.col(id_col),
         F.col("simhash"),
@@ -197,18 +194,6 @@ def _sig_from_dtoks(dt: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
     )
 
 
-def _word_minhash_sig(
-    docs: DataFrame, id_col: str, text_col: str, n_hashes: int = 16
-) -> DataFrame:
-    """(id, sig ARRAY<BIGINT>): MinHash over word token sets.
-
-    One explode + one groupBy with ``n_hashes`` min-aggregations: the token
-    split is computed once per document (not once per hash), and the mins
-    are map-side combinable, so Zipf-hot tokens never concentrate a key.
-    """
-    return _sig_from_dtoks(_distinct_tokens(docs, id_col, text_col), id_col, n_hashes)
-
-
 def _band_hash_cols(n_hashes: int, bands: int) -> list:
     """Per-slot 64-bit band hashes of a ``sig`` array column."""
     r = n_hashes // bands
@@ -218,26 +203,15 @@ def _band_hash_cols(n_hashes: int, bands: int) -> list:
     ]
 
 
-def _sig_bands(sig: DataFrame, id_col: str, n_hashes: int = 16, bands: int = 8) -> DataFrame:
-    """Explode a signature into its LSH band keys (r = n_hashes/bands)."""
-    band_cols = [
-        F.concat(F.lit(f"b{j}:"), c.cast("string"))
-        for j, c in enumerate(_band_hash_cols(n_hashes, bands))
-    ]
-    return sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band"))
-
-
 def _sig_band_slots(
     sig: DataFrame, id_col: str, n_hashes: int = 16, bands: int = 8
 ) -> DataFrame:
-    """(id, bv0..bv{bands-1}, slot, bandh): the slot-indexed twin of
-    :func:`_sig_bands` — same band hashes, but keyed (slot, bandh) with
-    every per-slot band hash carried as a SCALAR column for the
-    emit-once pair filter (scalar fixed-width fields replicate through
-    the salt cells ~20% cheaper than an array column: measured 3.7 s vs
-    4.8 s for the sf0.1 candidate stage).  Bucketing is identical to the
-    string form (the "b{j}:" prefix only ever encoded the slot, which is
-    now its own key column)."""
+    """(id, bv0..bv{bands-1}, slot, bandh): a signature's LSH band hashes
+    (r = n_hashes/bands rows each), keyed (slot, bandh) with every per-slot
+    band hash carried as a SCALAR column for the emit-once pair filter
+    (scalar fixed-width fields replicate through the salt cells ~20%
+    cheaper than an array column: measured 3.7 s vs 4.8 s for the sf0.1
+    candidate stage)."""
     base = sig.select(
         F.col(id_col),
         *[c.alias(f"bv{j}") for j, c in enumerate(_band_hash_cols(n_hashes, bands))],
@@ -313,13 +287,6 @@ def minhash_near_dup_pairs(
          per pair at 10^4-token documents); the verified row set at
          sf0.1 is bit-identical to the string-token implementation.
 
-    Cache lifecycle: the signature and token-set tables are persist()ed
-    because the returned plan consumes each twice (both join sides); they
-    stay cached until the caller's action completes.  Long-lived sessions
-    calling this repeatedly should ``spark.catalog.clearCache()`` between
-    independent runs (bench.py does) — unpersisting here would force the
-    most expensive stages to recompute inside the very plan we return.
-
     Band shape r = n_hashes/bands: the default 4 rows x 8 bands keeps
     recall at j >= 0.8 at 98.5% banding (+ ~0 prefilter loss) while
     admitting ~4x fewer sub-threshold candidates than 2 x 8 on dense
@@ -340,11 +307,11 @@ def minhash_near_dup_pairs(
     # per-consumer expression produced; toks applies array_distinct
     # AGAIN after hashing, so two distinct tokens colliding to one
     # 64-bit hash still collapse exactly as before.
-    dt = _distinct_tokens(docs, id_col, text_col).persist()
-    sig = _sig_from_dtoks(dt, id_col, n_hashes).persist()
+    dt = persist(_distinct_tokens(docs, id_col, text_col))
+    sig = persist(_sig_from_dtoks(dt, id_col, n_hashes))
     # hashed token sets (sorted BIGINTs) + their size; consumed by both
     # verify sides AND the count-bound carry
-    t = (
+    t = persist(
         dt.select(
             F.col(id_col),
             F.array_sort(
@@ -352,9 +319,7 @@ def minhash_near_dup_pairs(
                     F.transform(F.col("dtoks"), lambda x: F.xxhash64(x))
                 )
             ).alias("toks"),
-        )
-        .withColumn("n_toks", F.size("toks"))
-        .persist()
+        ).withColumn("n_toks", F.size("toks"))
     )
     bands_df = _sig_band_slots(sig, id_col, n_hashes, bands).join(
         t.select(F.col(id_col), "n_toks"), id_col
@@ -429,19 +394,19 @@ def cluster_documents(
     components -> (doc_id, cluster_id, cluster_size).  Singleton documents
     cluster with themselves.  The document-scale analogue of the mention
     pipeline (SURVEY §7 step 2), exercising A12/J10/J11/X13 end to end.
+    Returns holding no cache: ``out`` (a doc scan joined to materialized
+    components) is cheaper to read twice than to cache.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # persist the LSH-verify join: connected_components executes it once
-    # for its backend-selection count and once more when collecting edges —
-    # without the persist the most expensive stage of the whole flow runs
-    # twice (round-1 finding: 210 s for 5k docs, dominated by recompute)
-    edges = minhash_near_dup_pairs(docs, jaccard_threshold=jaccard_threshold).persist()
-    comps = connected_components(edges)
+    with cache_scope():
+        comps = connected_components(
+            minhash_near_dup_pairs(docs, jaccard_threshold=jaccard_threshold)
+        )
     out = (
         docs.select("doc_id")
         .join(comps, docs["doc_id"] == comps["node"], "left")
         .withColumn("cluster_id", F.coalesce("component", "doc_id"))
         .select("doc_id", "cluster_id")
-    ).persist()  # consumed twice: sizes aggregation + final join
+    )
     sizes = out.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return out.join(sizes, "cluster_id").select("doc_id", "cluster_id", "cluster_size")

@@ -36,6 +36,7 @@ from spel_spark.operators.spans import (
     span_eval_from_alignment,
 )
 from spel_spark.operators.words import resolve_words
+from spel_spark.session import persist
 
 # Default gold location, overridable per-host: the reference checkout path
 # only exists in this sandbox, so on any other machine set SPEL_AIDA_TESTC
@@ -208,7 +209,7 @@ def ep1_evaluate(
             F.col("doc_id").alias("conv_id"), F.lit(0).alias("turn_idx"), "text"
         )
     )
-    words = label_words(toks, gold_ids).persist()  # consumed by synth + joins x2
+    words = persist(label_words(toks, gold_ids))  # consumed by synth + joins x2
 
     def stream(corrupt: int | None) -> DataFrame:
         sub = synth_subword_annotations(words, corrupt, portable=portable_corruption)
@@ -223,8 +224,8 @@ def ep1_evaluate(
     # each stream is consumed twice (alignment + phrase counts): persist,
     # and reuse gold outright when there is no corruption (the gold-vs-gold
     # case would otherwise run an identical resolve pipeline twice)
-    gold_stream = stream(None).persist()
-    pred_stream = gold_stream if corrupt_every is None else stream(corrupt_every).persist()
+    gold_stream = persist(stream(None))
+    pred_stream = gold_stream if corrupt_every is None else persist(stream(corrupt_every))
     segments = span_align_resegment(gold_stream, pred_stream)
     metrics = span_eval_from_alignment(
         segments, ignore_over_generated=ignore_over_generated

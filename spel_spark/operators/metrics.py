@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spel_spark.session import persist
+
 
 def resolve_labeled_pairs(labeled: DataFrame, clusters: DataFrame) -> DataFrame:
     """Join the (conv,turn,begin)-keyed labeled pairs to predicted clusters.
@@ -22,22 +24,14 @@ def resolve_labeled_pairs(labeled: DataFrame, clusters: DataFrame) -> DataFrame:
     clusters: mention rows with (conv_id, turn_idx, begin_char, cluster_id).
     Adds pred_same.  Pairs whose mentions were not extracted resolve to
     pred_same = false (a recall miss, exactly like a blocking miss).
-
-    Cache contract: each call persists a derived projection of
-    ``clusters`` (never the caller's DataFrame) and does not unpersist it.
-    Callers running this repeatedly in one session should call
-    ``spark.catalog.clearCache()`` between runs, as bench.py does.
     """
     # consumed twice (a-side AND b-side join): persist the narrow derived
     # projection so the cluster-assignment DAG behind ``clusters`` — which
     # projects the full mention instance table — expands once, not twice
     # (guide §2.4/§5; r6 in-process A/B on the 2000-turn ER gate: median
     # 7.51 s -> 6.77 s, and at 10^9-mention scale the second expansion is
-    # a second full instance-table pass).  Same lifecycle contract as
-    # anchor_pairs/minhash_near_dup_pairs.
-    c = clusters.select(
-        "conv_id", "turn_idx", "begin_char", "cluster_id"
-    ).persist()
+    # a second full instance-table pass).
+    c = persist(clusters.select("conv_id", "turn_idx", "begin_char", "cluster_id"))
     a = c.select(
         F.col("conv_id").alias("a_conv"),
         F.col("turn_idx").alias("a_turn"),

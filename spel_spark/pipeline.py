@@ -49,6 +49,7 @@ from spel_spark.operators.mentions import (
     with_norm_surface,
 )
 from spel_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs, threshold_edges
+from spel_spark.session import cache_scope, persist
 
 STAGES = ["mentions", "surfaces", "blocks", "pairs", "scores", "edges", "clusters"]
 
@@ -104,18 +105,16 @@ def run_pipeline(
     reference's continue_from_previous_checkpoint
     (src/spel/finetune_step_1.py:65-66).  ``store=None`` runs ephemerally
     (localCheckpoint only, no durability — for quick evaluations).
+    Each durable stage is written inside a ``cache_scope``; an ephemeral
+    run's caches belong to the scope around the caller's action.
     """
     cfg = config or PipelineConfig()
 
-    # single-consumer stages are fused, not persisted: scores feeds only
-    # edges, blocks feeds only pairs, pairs feeds only scores — persisting
-    # them pays a cache fill nothing reads twice (r5: dropping the blocks/
-    # pairs persists removed two serial materialization barriers from the
-    # fused DAG).  mentions is persisted (columnar cache): the 8M-turn
-    # scaling runs showed the re-extract pass in assign_clusters costs
-    # more than the cache fill; surfaces (tiny) is read by blocks AND
-    # assign; edges by CC's backend-selection count AND the collect.
-    _EPHEMERAL_NO_PERSIST = {"scores", "clusters", "blocks", "pairs"}
+    # an ephemeral run fuses the single-consumer stages into one DAG (r5:
+    # persisting blocks/pairs added two serial materialization barriers)
+    # and persists only mentions (8M-turn runs: re-extracting it for
+    # assign_clusters cost more than the cache fill) and surfaces (read by
+    # blocks AND assign); connected_components caches edges itself
     inputs = None
     if store is not None:
         inputs = [_input_identity(spark, df) for df in (transcripts, redirects)]
@@ -128,13 +127,9 @@ def run_pipeline(
         """``fields``: the PipelineConfig fields ``build`` reads."""
         if store is None:
             df = build()
-            # fuse into one DAG; persist only small reused outputs and
-            # the wide mentions table (MENTIONS_STORAGE).
-            if name in _EPHEMERAL_NO_PERSIST:
-                return df
             if name == "mentions":
-                return df.persist(MENTIONS_STORAGE)
-            return df.persist()
+                return persist(df, MENTIONS_STORAGE)
+            return persist(df) if name == "surfaces" else df
         blob = json.dumps([
             name, {f: getattr(cfg, f) for f in fields}, fps[-1:], inputs,
             spel_spark.__version__,
@@ -143,8 +138,8 @@ def run_pipeline(
         fps.append(fp)
         if resume and store.committed(name) == fp:
             return store.read(name)
-        df = build()
-        store.write(df, name, fp)
+        with cache_scope():
+            store.write(build(), name, fp)
         committed = store.read(name)
         # score histogram lands in lineage for any stage carrying a score
         # column (scores, edges) — A13 / SURVEY §1.4

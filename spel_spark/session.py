@@ -4,7 +4,7 @@ Plan-quality confs (AQE, skew join, Arrow, shuffled-hash joins) are set
 everywhere; master, heap and shuffle partitions are derived, never passed
 in (see ``get_spark``).  ``SPARK_GRAFT_CPUS`` and ``SPEL_DRIVER_MEM`` are
 deployment settings, read only here, that override the local core count and
-heap.
+heap.  ``persist``/``cache_scope`` are the package's one cache lifecycle.
 """
 
 from __future__ import annotations
@@ -12,8 +12,11 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def package_zip() -> str:
@@ -39,6 +42,17 @@ def package_zip() -> str:
                         full = os.path.join(dirpath, fn)
                         zf.write(full, os.path.relpath(full, root))
     return zpath
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Add the package zip to the SparkContext unless it already lists it."""
+    try:
+        zpath = package_zip()
+        listed = spark.sparkContext._jsc.sc().listFiles().mkString("\n").split("\n")
+        if os.path.basename(zpath) not in map(os.path.basename, listed):
+            spark.sparkContext.addPyFile(zpath)
+    except Exception:
+        pass  # read-only tmp: workers rely on PYTHONPATH (--py-files on a cluster)
 
 
 def get_spark(app_name: str = "spel_spark", master: str | None = None) -> SparkSession:
@@ -86,12 +100,43 @@ def get_spark(app_name: str = "spel_spark", master: str | None = None) -> SparkS
         parallelism = spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in this context, or read-only tmp — workers
-        # then rely on PYTHONPATH (spark-submit --py-files on a cluster)
+    ship_package(spark)
     return spark
+
+
+# the frames each open cache_scope owns, innermost last
+_SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar("cache_scopes", default=())
+
+
+def persist(df: DataFrame, level=StorageLevel.MEMORY_AND_DISK_DESER) -> DataFrame:
+    """Cache ``df`` (at ``DataFrame.persist``'s default level) until the
+    innermost open ``cache_scope`` exits: the code that runs the actions owns
+    the cache.  A plan that is already cached is returned as it is and not
+    registered, so a scope never releases a cache it did not create.  Outside
+    any scope this is a plain persist that the caller releases."""
+    held = df.storageLevel
+    if held.useMemory or held.useDisk:
+        return df
+    df = df.persist(level)
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+@contextmanager
+def cache_scope():
+    """Unpersist what ``persist`` cached inside this scope, on return or
+    raise.  Scopes nest; the stack is a ContextVar, so each thread (a
+    ``foreachBatch`` sink) keeps its own.  ``@cache_scope()`` scopes a call."""
+    owned: list[DataFrame] = []
+    token = _SCOPES.set((*_SCOPES.get(), owned))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for df in owned:
+            df.unpersist()
 
 
 def ensure_min_parallelism(df):

@@ -92,6 +92,7 @@ from spel_spark.operators.clustering import (
     surface_clusters,
 )
 from spel_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs, threshold_edges
+from spel_spark.session import cache_scope, persist
 
 
 def _epoch_inputs(marker: dict | None, state_dir: str, epoch: int) -> tuple:
@@ -184,6 +185,7 @@ def _resolve_clusters(store: CheckpointStore, epochs: list[int]) -> DataFrame:
     return df.drop("epoch") if len(epochs) == 1 else _latest(df)
 
 
+@cache_scope()
 def merge_batch(
     spark: SparkSession,
     batch_mentions: DataFrame,
@@ -240,7 +242,7 @@ def merge_batch(
     # this epoch's new-vs-old pairs, which no later epoch generates.
     store = CheckpointStore(spark, state_dir)
 
-    m = batch_mentions.persist()
+    m = persist(batch_mentions)
     store.write_epoch(m, "mentions", epoch)
 
     batch_surf = surface_nodes(m)
@@ -262,7 +264,7 @@ def merge_batch(
         new_surf = batch_surf.join(
             prev_surf.select("norm_surface"), "norm_surface", "left_anti"
         )
-    merged_surf = merged_surf.persist()
+    merged_surf = persist(merged_surf)
     store.write_epoch(
         merged_surf.select("norm_surface", "n_mentions", "min_mention_id"),
         "surfaces",
@@ -273,9 +275,9 @@ def merge_batch(
     # index (ids only through the salt cells; norms joined back after).
     # A pair meets once per shared key and new x new pairs in both
     # orientations: the one canonical distinct below dedups both.
-    new_blocks = blocking_keys(new_surf).select(
-        "surface_id", "norm_surface", "block_key"
-    ).persist()
+    new_blocks = persist(
+        blocking_keys(new_surf).select("surface_id", "norm_surface", "block_key")
+    )
     store.write_epoch(new_blocks, "blocks", epoch)
     all_blocks = new_blocks.select("surface_id", "block_key")
     if prev_epoch is not None:
@@ -337,17 +339,15 @@ def merge_batch(
         "surf_clusters", SURF_CLUSTERS_SCHEMA, [epoch]
     ).drop("epoch")
     delta = assign_mentions(m, sc_new)
-    changed = None
     if prev_epoch is not None:
         prev_sc = store.read_epochs("surf_clusters", SURF_CLUSTERS_SCHEMA, [prev_epoch])
-        changed = (
+        changed = persist(
             sc_new.join(
                 prev_sc.withColumnRenamed("cluster_id", "prev_cluster_id"),
                 "norm_surface",
             )
             .filter(F.col("cluster_id") != F.col("prev_cluster_id"))
             .select("norm_surface", "cluster_id")
-            .persist()
         )
         # common case: an epoch that merges nothing across old clusters —
         # skip the prior-mention scan entirely (isEmpty is a limit(1) job
@@ -424,10 +424,6 @@ def merge_batch(
     for tbl in ("surfaces", "components", "surf_clusters"):
         store.prune_epochs(tbl, keep_snap)
     store.prune_epochs("clusters", {*cluster_epochs, *prev_cluster_epochs})
-
-    for df in (m, merged_surf, new_blocks, changed):
-        if df is not None:
-            df.unpersist()
     return _resolve_clusters(store, cluster_epochs)
 
 

@@ -27,6 +27,10 @@ def _mentions(spark, pdf):
     )
 
 
+def _held(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def _cluster_map(df):
     return {r.mention_id: r.cluster_id
             for r in df.select("mention_id", "cluster_id").collect()}
@@ -72,7 +76,8 @@ def test_incremental_epoch_retry_is_idempotent(spark, corpus, tmp_path):
 def test_corrupt_state_fails_batch_instead_of_resetting(spark, corpus, tmp_path):
     """A state table that EXISTS but cannot be read must raise (so the
     streaming checkpoint retries the batch) — mapping it to 'no state'
-    would silently drop this epoch's new-vs-old pairs forever."""
+    would silently drop this epoch's new-vs-old pairs forever.  The failed
+    epoch still releases what it cached."""
     import pytest
 
     state = str(tmp_path / "state_bad")
@@ -84,8 +89,10 @@ def test_corrupt_state_fails_batch_instead_of_resetting(spark, corpus, tmp_path)
     shutil.rmtree(f"{state}/blocks")
     with open(f"{state}/blocks", "w") as f:
         f.write("not parquet")
+    before = _held(spark)
     with pytest.raises(Exception):
         merge_batch(spark, _mentions(spark, pdf.iloc[100:]), state, epoch=1)
+    assert _held(spark) - before == set()
 
 
 def test_streaming_incremental_er_matches_batch(spark, corpus, tmp_path):
@@ -410,14 +417,19 @@ def test_merge_batch_leaves_no_persisted_rdds(spark, corpus, tmp_path):
     """merge_batch unpersists everything it persists: no RDD persisted
     during an epoch is still held after it.  Compared as id sets, not
     sizes: RDDs that earlier tests left behind may be released by Spark's
-    cleaner while an epoch runs."""
+    cleaner while an epoch runs.  A batch the caller cached stays cached:
+    merge_batch releases only what it cached itself."""
     state = str(tmp_path / "state_cache")
-    pdf = corpus.transcripts.head(300)
+    pdf = corpus.transcripts.head(400)
 
-    def held():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    for epoch, part in enumerate((pdf.iloc[:100], pdf.iloc[100:200], pdf.iloc[200:])):
-        before = held()
+    for epoch, part in enumerate((pdf.iloc[:100], pdf.iloc[100:200], pdf.iloc[200:300])):
+        before = _held(spark)
         merge_batch(spark, _mentions(spark, part), state, epoch=epoch)
-        assert held() - before == set(), epoch
+        assert _held(spark) - before == set(), epoch
+    mine = _mentions(spark, pdf.iloc[300:]).cache()
+    mine.count()
+    before = _held(spark)
+    merge_batch(spark, mine, state, epoch=3)
+    assert _held(spark) - before == set()
+    assert mine.storageLevel.useMemory
+    mine.unpersist()

@@ -27,24 +27,24 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
-    from spel_spark.session import get_spark
+    from spel_spark.session import cache_scope, get_spark
 
     spark = get_spark(app_name="checksums")
     results: dict[str, dict] = {}
     for name, fn in entry.queries().items():
         if only and name not in only:
             continue
-        spark.catalog.clearCache()
         try:
-            df = fn(spark, sf_dir)
-            # deterministic column order; stringify doubles at full repr via
-            # cast to string is LOCALE-free in Spark; hash the struct row
-            row_hash = F.xxhash64(F.to_json(F.struct(*df.columns)))
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(row_hash).alias("h"),
-                F.sum(row_hash.cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
+            with cache_scope():
+                df = fn(spark, sf_dir)
+                # deterministic column order; stringify doubles at full repr via
+                # cast to string is LOCALE-free in Spark; hash the struct row
+                row_hash = F.xxhash64(F.to_json(F.struct(*df.columns)))
+                row = df.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.bit_xor(row_hash).alias("h"),
+                    F.sum(row_hash.cast("decimal(38,0)")).alias("s"),
+                ).collect()[0]
             results[name] = {
                 "n": row["n"],
                 "h": row["h"],
